@@ -298,7 +298,7 @@ def main() -> None:
         # posting re-read + re-decoded); the rep only sheds host IO spikes
         best = float("inf")
         for _ in range(2):
-            searcher._cache.clear(); searcher._scored_cache.clear()
+            searcher.clear_caches()
             t0 = time.perf_counter()
             searcher.search(q, k=10)
             best = min(best, time.perf_counter() - t0)
@@ -308,7 +308,7 @@ def main() -> None:
         # exact chunk rescore (results identical; test_wand_chunkmax)
         best = float("inf")
         for _ in range(2):
-            searcher._cache.clear(); searcher._scored_cache.clear()
+            searcher.clear_caches()
             t0 = time.perf_counter()
             searcher.search(q, k=10, algorithm="chunkmax")
             best = min(best, time.perf_counter() - t0)

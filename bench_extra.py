@@ -162,8 +162,7 @@ def mode_query() -> None:
         for q in BENCH_QUERIES:
             best = float("inf")
             for _ in range(2):
-                searcher._cache.clear()
-                searcher._scored_cache.clear()
+                searcher.clear_caches()
                 t0 = time.perf_counter()
                 searcher.search(q, k=10)
                 best = min(best, time.perf_counter() - t0)

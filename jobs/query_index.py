@@ -45,11 +45,12 @@ def main() -> None:
     )
     ap.add_argument(
         "--algorithm",
-        choices=["auto", "wand", "exhaustive", "chunkmax"],
+        choices=["auto", "chunkmax"],
         default="auto",
-        help="serving scorer for plain term queries: auto routes by "
-        "candidate volume; chunkmax prunes undecoded chunks by block-max "
-        "upper bounds (exact results; wins on skewed tf corpora)",
+        help="serving scorer for plain term queries: auto scores every "
+        "candidate from the cached decoded postings; chunkmax prunes "
+        "undecoded chunks by block-max upper bounds (exact results; wins "
+        "on cold queries over skewed tf corpora)",
     )
     args = ap.parse_args()
 

@@ -9,7 +9,7 @@ surveyed in SURVEY.md) as an idiomatic Spark DataFrame engine:
 - hierarchical, checkpoint-resumable segment merging with latest-wins upsert
   semantics (reference: IndexBuilderReducer.java:159 ``updateDocument``),
 - corpus-stat-driven BM25 top-k query answering (distributed DataFrame path
-  and a low-latency block-max WAND path), rank-identical to a brute-force
+  and a low-latency vectorized serving path), rank-identical to a brute-force
   float64 oracle,
 - the reference's surrounding operator inventory (generation-fallback lookup
   join, TTL anti-join, latest-per-key, pair symmetrization, ...) re-expressed

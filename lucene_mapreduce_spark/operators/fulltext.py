@@ -1327,7 +1327,7 @@ def _gate_index_unmerged(spark: SparkSession, sf_dir: str) -> str:
 def bm25_wand_topk_unmerged(
     spark: SparkSession, sf_dir: str, query_text: str = FLAGSHIP_QUERY, k: int = 10
 ) -> DataFrame:
-    """Multi-generation serving: block-max WAND over the UNMERGED
+    """Multi-generation serving: IndexSearcher.search over the UNMERGED
     2-generation gate index — stale shadowed copies must be masked by the
     latest-wins live map, and the result must match the same corpus oracle
     as every other BM25 path."""
@@ -1348,7 +1348,7 @@ def bm25_wand_topk_unmerged(
 def bm25_wand_topk_documents(
     spark: SparkSession, sf_dir: str, query_text: str = FLAGSHIP_QUERY, k: int = 10
 ) -> DataFrame:
-    """The serving path (block-max WAND / vectorized exhaustive) against the
+    """The serving path (IndexSearcher.search, exact vectorized) against the
     same oracle: IndexSearcher reads the merged gate index without Spark."""
     from lucene_mapreduce_spark.query.wand import IndexSearcher
 
@@ -1374,7 +1374,7 @@ def bm25_chunkmax_topk_documents(
     batched rescore, wand.search_chunkmax) against the SAME corpus oracle
     as every other BM25 path: the merged gate index has no shadowed docs,
     so the header-df path is taken (asserted), and ranks AND float64
-    scores must equal the exhaustive/WAND/scan results."""
+    scores must equal the search()/scan results."""
     from decimal import ROUND_HALF_UP, Decimal
 
     from lucene_mapreduce_spark.query.wand import IndexSearcher

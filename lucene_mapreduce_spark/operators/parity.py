@@ -108,9 +108,12 @@ def _global_ranked(
     omap = F.create_map(
         *[F.lit(x) for kv in sorted(offsets.items()) for x in kv]
     )
+    # an empty frame has no partitions, and create_map() of nothing is a
+    # map<void,void> that cannot be indexed by _pid
+    offset = omap[F.col("_pid")] if offsets else F.lit(0)
     wloc = Window.partitionBy("_pid").orderBy(F.asc(order_col))
     ranked = part.withColumn(
-        rank_col, F.row_number().over(wloc) + omap[F.col("_pid")]
+        rank_col, F.row_number().over(wloc) + offset
     ).drop("_pid")
     return ranked, acc
 

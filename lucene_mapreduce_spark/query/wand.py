@@ -1,20 +1,25 @@
-"""Low-latency top-k serving: block-max WAND over segment files.
+"""Low-latency top-k serving: exact vectorized BM25 over segment files.
 
 The distributed path (segments.bm25_index_topk) is for query *batches*; this
 path answers a single query in milliseconds by reading only the needed
 posting rows straight from parquet (pyarrow dataset, phash directory pruning
-+ term dictionary filter) and running block-max WAND (Ding & Suel 2011,
-"Faster top-k document retrieval using block-max indexes") on the decoded
-arrays. No reference-code lineage: the reference's analogue is top-1 exact
-key probing (XdiReportReducer.java:355-371); WAND generalizes it to scored
-top-k with *safe* pruning — the result is bit-identical to the exhaustive
-scorer (asserted against the oracle in tests).
++ term dictionary filter) and scoring the decoded arrays with numpy. No
+reference-code lineage: the reference's analogue is top-1 exact key probing
+(XdiReportReducer.java:355-371); this generalizes it to scored top-k.
 
-Exactness: candidate docs are fully scored by accumulating idf*tfn in
-ascending-term order, the same canonical float64 order as every other path;
-pruning only skips docs whose upper bound cannot reach the current k-th
-score, with ties resolved (score desc, doc_id asc) — so the top-k set AND
-scores match the oracle exactly.
+Exactness: every candidate doc is scored by a per-term scatter-add of
+idf*tfn in ascending-term order — over the union of the terms' postings
+(:meth:`IndexSearcher._accumulate`) or over a fixed candidate array for
+parsed queries (:func:`_score_candidates`) — the same canonical float64
+order as every other path, and cut to the top-k by (score desc, doc_id
+asc) in :func:`_topk`, so the top-k set AND scores match the oracle
+exactly.
+
+Block-max pruning lives in the ``chunkmax`` cold mode
+(:meth:`IndexSearcher.search_chunkmax`, after Ding & Suel 2011, "Faster
+top-k document retrieval using block-max indexes"): chunk upper bounds come
+from payload headers, so whole chunks are skipped before any varbyte decode,
+and the surviving chunks are rescored exactly through the same helpers.
 
 Serving at 10^12 docs: one query touches only its terms' (term, chunk) rows
 inside the pruned phash directories — IO proportional to posting-list
@@ -24,7 +29,6 @@ as the reference sharded reducers by partition count.
 
 from __future__ import annotations
 
-import heapq
 import os
 from concurrent.futures import ThreadPoolExecutor
 
@@ -40,7 +44,6 @@ from lucene_mapreduce_spark.query.bm25 import B, K1, bm25_idf
 
 from lucene_mapreduce_spark.functions.hashing import term_phash, xxhash64  # noqa: F401  (re-exported; parity tested vs Spark)
 
-_BM_BLOCK = 128  # block granularity for in-memory block-max pruning
 _PREFETCH_WORKERS = 8  # cold-query term prefetch pool width
 _POOL: ThreadPoolExecutor | None = None
 
@@ -106,79 +109,34 @@ def _lev_banded(terms: np.ndarray, lens: np.ndarray, word: str) -> np.ndarray:
     return out
 
 
-class _TermCursor:
-    __slots__ = (
-        "term", "idf", "docids", "tfs", "dls", "pos", "ub", "n",
-        "block_ub", "block_last", "_contribs",
-    )
+def _topk(docids: np.ndarray, scores: np.ndarray, k: int) -> list[tuple[int, float]]:
+    """Exact top-k [(doc_id, score)] by (score desc, doc_id asc). The
+    partition keeps every row tied-or-above the k-th score, so the doc_id
+    tie-break stays exact while only that subset is sorted."""
+    if len(scores) > k:
+        kth = -np.partition(-scores, k - 1)[k - 1]
+        keep = scores >= kth
+        docids, scores = docids[keep], scores[keep]
+    order = np.lexsort((docids, -scores))[:k]
+    return [(int(docids[i]), float(scores[i])) for i in order]
 
-    def __init__(self, term, idf, docids, tfs, dls, contribs):
-        self.term = term
-        self.idf = idf
-        self.docids = docids
-        self.tfs = tfs
-        self.dls = dls
-        self._contribs = contribs
-        self.pos = 0
-        self.n = len(docids)
-        self.ub = float(contribs.max()) if self.n else 0.0
-        # per-block maxima (block-max WAND) are built LAZILY: the exhaustive
-        # head-term route never touches them, and they were a measurable
-        # slice of cold-query setup (np.pad copies of multi-100k-posting
-        # contrib arrays).
-        self.block_ub = None
-        self.block_last = None
 
-    def _blocks(self) -> tuple[np.ndarray, np.ndarray]:
-        if self.block_ub is None:
-            n_blocks = (self.n + _BM_BLOCK - 1) // _BM_BLOCK
-            if n_blocks == 0:
-                self.block_ub = np.zeros(0, np.float64)
-                self.block_last = np.zeros(0, self.docids.dtype)
-            else:
-                bstarts = np.arange(n_blocks, dtype=np.int64) * _BM_BLOCK
-                # reduceat: per-block max without padding/copying
-                self.block_ub = np.maximum.reduceat(self._contribs, bstarts)
-                self.block_last = self.docids[
-                    np.minimum(bstarts + _BM_BLOCK, self.n) - 1
-                ]
-        return self.block_ub, self.block_last
-
-    def contribs_full(self) -> np.ndarray:
-        return self._contribs
-
-    @property
-    def cur(self) -> int:
-        return int(self.docids[self.pos]) if self.pos < self.n else 1 << 62
-
-    def cur_block_ub(self, doc: int) -> float:
-        """Upper bound of the block containing `doc` for this cursor."""
-        if self.pos >= self.n:
-            return 0.0
-        block_ub, block_last = self._blocks()
-        b = int(np.searchsorted(block_last, doc, side="left"))
-        if b >= len(block_ub):
-            return 0.0
-        return float(block_ub[b])
-
-    def block_end(self, doc: int) -> int:
-        """Last docid of the block containing `doc` (for deep skips)."""
-        if self.pos >= self.n:
-            return 1 << 62
-        _, block_last = self._blocks()
-        b = int(np.searchsorted(block_last, doc, side="left"))
-        if b >= len(block_last):
-            return 1 << 62
-        return int(self.block_last[b])
-
-    def advance_to(self, target: int) -> None:
-        # galloping via searchsorted over the decoded array (the on-disk skip
-        # table already bounded what we decoded to the term's chunks)
-        self.pos += int(np.searchsorted(self.docids[self.pos:], target, side="left"))
+def _score_candidates(cand: np.ndarray, parts) -> np.ndarray:
+    """Scores of a fixed candidate docid array: for each (docids,
+    contribs) part, in the given (ascending-term) order, add the part's
+    contribution to every candidate it contains. Candidates no part
+    contains score 0.0."""
+    scores = np.zeros(len(cand), np.float64)
+    for docids, contribs in parts:
+        idx = np.minimum(np.searchsorted(docids, cand), max(len(docids) - 1, 0))
+        hit = docids[idx] == cand
+        scores[hit] += contribs[idx[hit]]
+    return scores
 
 
 class IndexSearcher:
-    """Loads manifest + stats once; answers queries with block-max WAND.
+    """Loads manifest + stats once; answers exact top-k queries from the
+    decoded posting arrays.
 
     Serves merged AND multi-generation (unmerged) indexes: between merges —
     most of the time in an hourly incremental pipeline — postings are read
@@ -313,9 +271,10 @@ class IndexSearcher:
         """All (chunk-ordered) posting rows of one term -> concatenated
         arrays + precomputed contributions, LRU-cached (hot query terms stay
         resident, like Lucene's term/posting caches)."""
-        cached = self._cache.get(term)
-        if cached is not None or term in self._cache:
-            return cached
+        if term in self._cache:
+            got = self._cache.pop(term)
+            self._cache[term] = got  # re-insert: eviction pops the oldest
+            return got
         got = self._load_term_cold(term)
         self._cache_put(term, got)
         return got
@@ -337,6 +296,12 @@ class IndexSearcher:
         if len(self._cache) >= self._cache_cap:
             self._cache.pop(next(iter(self._cache)))
         self._cache[term] = got
+
+    def clear_caches(self) -> None:
+        """Empty the posting cache and the scored term-set cache, so the
+        next query reads and scores cold."""
+        self._cache.clear()
+        self._scored_cache.clear()
 
     def prefetch_terms(self, terms) -> None:
         """Warm the posting cache for every uncached term CONCURRENTLY —
@@ -406,8 +371,9 @@ class IndexSearcher:
         """Exact boolean retrieval over the posting lists: docids containing
         ALL query terms ("and") or ANY ("or"), sorted ascending. This is the
         reference QueryParser's conjunctive/disjunctive surface
-        (XdiReportReducer.java:356) answered from the same decoded cursors
-        WAND uses — set intersection/union over sorted docid arrays."""
+        (XdiReportReducer.java:356) answered from the same decoded posting
+        arrays search() scores — set intersection/union over sorted docid
+        arrays."""
         terms = sorted(set(tokenize_string(query_text)))
         self.prefetch_terms(terms)
         lists = []
@@ -429,7 +395,7 @@ class IndexSearcher:
         """Conjunctive retrieval with exclusion: docids containing ALL of
         include_text's terms and NONE of exclude_text's — Lucene's
         MUST/MUST_NOT clause pair, answered as sorted-array set difference
-        over the same decoded cursors (prohibited lists are only ever read
+        over the same decoded postings (prohibited lists are only ever read
         for the candidate range, never scored)."""
         inc = self.search_boolean(include_text, mode="and")
         if not len(inc):
@@ -559,7 +525,7 @@ class IndexSearcher:
         """Exact phrase retrieval: docids whose token stream contains the
         query tokens as a contiguous subsequence, sorted ascending.
 
-        Two-stage: the posting cursors AND-intersect to a candidate set
+        Two-stage: the posting lists AND-intersect to a candidate set
         (cheap, index-only), then adjacency is verified from the
         positional sidecar when every generation has one (Lucene's .pos
         strategy; ``use="positions"`` to require it) or by re-tokenizing
@@ -590,7 +556,7 @@ class IndexSearcher:
         query/parse.py for the exact grammar/semantics. Returns exact top-k
         [(doc_id, score)] by (score desc, doc_id asc); scores are BM25 over
         the SHOULD+MUST terms with corpus-global stats, candidates filtered
-        by the MUST/phrase/MUST_NOT clauses through the same cursors."""
+        by the MUST/phrase/MUST_NOT clauses through the same postings."""
         from lucene_mapreduce_spark.query.parse import parse_query
 
         must, must_not, phrases, should = parse_query(query)
@@ -615,20 +581,13 @@ class IndexSearcher:
             cand = np.setdiff1d(cand, exc, assume_unique=True)
         if not len(cand):
             return []
-        # exact scoring of the candidate set: per-term scatter-add in
-        # ascending term order (same accumulation as _search_exhaustive)
-        scores = np.zeros(len(cand), np.float64)
-        for t in scoring:
-            got = self._read_term(t)
-            if got is None:
-                continue
-            docids, _tfs, _dls, contribs, _idf = got
-            idx = np.searchsorted(docids, cand)
-            idx_c = np.minimum(idx, max(len(docids) - 1, 0))
-            hit = docids[idx_c] == cand
-            scores[hit] += contribs[idx_c[hit]]
-        order = np.lexsort((cand, -scores))[:k]
-        return [(int(cand[i]), float(scores[i])) for i in order]
+        # ascending term order: the same accumulation as search()
+        parts = [
+            (got[0], got[3])
+            for got in map(self._read_term, scoring)
+            if got is not None
+        ]
+        return _topk(cand, _score_candidates(cand, parts), k)
 
     def indexed_fields(self) -> set[str]:
         """Keyword fields indexed in EVERY generation (usable as posting
@@ -870,34 +829,22 @@ class IndexSearcher:
                     keep.append(int(d))
             cand = np.asarray(keep, np.int64)
         if min_should_match > 0 and len(cand) and spec["should"]:
-            mcount = np.zeros(len(cand), np.int64)
-            for t in spec["should"]:
-                got = self._read_term(t)
-                if got is None:
-                    continue
-                docids = got[0]
-                idx = np.searchsorted(docids, cand)
-                idx_c = np.minimum(idx, max(len(docids) - 1, 0))
-                hit = docids[idx_c] == cand
-                mcount[hit] += 1
-            cand = cand[mcount >= min_should_match]
+            # a unit contribution per term => the score is the match count
+            ones = [
+                (got[0], np.ones(len(got[0])))
+                for got in map(self._read_term, spec["should"])
+                if got is not None
+            ]
+            cand = cand[_score_candidates(cand, ones) >= min_should_match]
         if not len(cand):
             return []
-        # exact scoring: per-term scatter-add in ascending term order,
-        # each term's contribution scaled by its query-time boost
-        scores = np.zeros(len(cand), np.float64)
-        for t in scoring:
-            got = self._read_term(t)
-            if got is None:
-                continue
-            docids, _tfs, _dls, contribs, _idf = got
-            w = spec["boosts"].get(t, 1.0)
-            idx = np.searchsorted(docids, cand)
-            idx_c = np.minimum(idx, max(len(docids) - 1, 0))
-            hit = docids[idx_c] == cand
-            scores[hit] += w * contribs[idx_c[hit]]
-        order = np.lexsort((cand, -scores))[:k]
-        return [(int(cand[i]), float(scores[i])) for i in order]
+        # ascending term order, each contribution scaled by its boost
+        parts = [
+            (got[0], spec["boosts"].get(t, 1.0) * got[3])
+            for t, got in zip(scoring, map(self._read_term, scoring))
+            if got is not None
+        ]
+        return _topk(cand, _score_candidates(cand, parts), k)
 
     def _verify_near_positions(
         self, cand: np.ndarray, terms: list[str], window: int
@@ -947,7 +894,7 @@ class IndexSearcher:
     ) -> np.ndarray:
         """Proximity retrieval (Lucene SpanNear, unordered): docids where
         some `window`-token span contains ALL query terms. Same two-stage
-        strategy as phrases: posting cursors AND-intersect to candidates,
+        strategy as phrases: posting lists AND-intersect to candidates,
         then the positional sidecar (when every generation has one, or
         ``use="positions"``) or the stored fields (``use="stored"``)
         verify the window — IO proportional to the conjunctive result,
@@ -977,95 +924,20 @@ class IndexSearcher:
     ) -> list[tuple[int, float]]:
         """Exact top-k [(doc_id, score)] by (score desc, doc_id asc).
 
-        algorithm: "wand" (block-max WAND loop — wins on selective queries
-        over long indexes, where skipping eliminates most candidates),
-        "exhaustive" (fully vectorized numpy scoring — wins on dense
-        head-term queries where WAND can't prune and a Python-loop pivot
-        walk would touch nearly every doc), or "auto" (route by candidate
-        volume). Both are exact and tested rank+score-identical.
-        "chunkmax" routes to search_chunkmax (exact early-terminated
-        decode; see that method).
+        algorithm: "auto" reads each query term's cached decoded postings
+        and scores every candidate with vectorized numpy
+        (:meth:`_scored`); "chunkmax" is the cold-path mode that prunes
+        whole chunks by block-max upper bounds before decoding
+        (:meth:`search_chunkmax`). Both are exact and tested rank+score
+        identical to the oracle; any other value raises ValueError.
         """
         if algorithm == "chunkmax":
             return self.search_chunkmax(query_text, k)
-        terms = sorted(set(tokenize_string(query_text)))
-        self.prefetch_terms(terms)
-        cursors: list[_TermCursor] = []
-        for t in terms:
-            got = self._read_term(t)
-            if got is None:
-                continue
-            docids, tfs, dls, contribs, idf = got
-            cursors.append(_TermCursor(t, idf, docids, tfs, dls, contribs))
-        if not cursors or self.n_docs == 0:
-            return []
-        if algorithm == "exhaustive" or (
-            algorithm == "auto" and sum(c.n for c in cursors) > 50_000
-        ):
-            return self._search_exhaustive(cursors, k)
-
-        heap: list[tuple[float, int]] = []  # (score, -doc_id) min-heap of top-k
-
-        def threshold() -> float:
-            return heap[0][0] if len(heap) == k else -1.0
-
-        while True:
-            live = [c for c in cursors if c.pos < c.n]
-            if not live:
-                break
-            live.sort(key=lambda c: c.cur)
-            # pivot: first prefix whose summed UBs could beat-or-tie the
-            # threshold (>= because an equal score can still enter the top-k
-            # via the doc_id tie-break)
-            acc, pivot_i = 0.0, -1
-            th = threshold()
-            for i, c in enumerate(live):
-                acc += c.ub
-                if acc >= th:
-                    pivot_i = i
-                    break
-            if pivot_i < 0:
-                break
-            pivot_doc = live[pivot_i].cur
-            # block-max refinement (BMW): bound pivot_doc by the maxima of
-            # the blocks that actually contain it, over EVERY cursor that
-            # could contribute to it — the prefix plus any later cursor
-            # currently sitting exactly at pivot_doc.
-            hi = pivot_i
-            while hi + 1 < len(live) and live[hi + 1].cur == pivot_doc:
-                hi += 1
-            block_acc = sum(c.cur_block_ub(pivot_doc) for c in live[: hi + 1])
-            if block_acc < th:
-                # safe deep skip: past the shallowest block end, but never
-                # past the next cursor's current doc (docs in between could
-                # combine prefix terms with that cursor's term)
-                skip_to = min(c.block_end(pivot_doc) for c in live[: hi + 1]) + 1
-                if hi + 1 < len(live):
-                    skip_to = min(skip_to, live[hi + 1].cur)
-                for c in live[: hi + 1]:
-                    c.advance_to(skip_to)
-                continue
-            if live[0].cur == pivot_doc:
-                # fully score pivot_doc: canonical ascending-term order
-                score = 0.0
-                for c in sorted(
-                    (c for c in live if c.cur == pivot_doc), key=lambda c: c.term
-                ):
-                    score += self._contrib(c.idf, c.tfs[c.pos], c.dls[c.pos])
-                entry = (score, -pivot_doc)
-                if len(heap) < k:
-                    heapq.heappush(heap, entry)
-                elif entry > heap[0]:
-                    heapq.heapreplace(heap, entry)
-                for c in live:
-                    if c.cur == pivot_doc:
-                        c.pos += 1
-            else:
-                for c in live[:pivot_i]:
-                    c.advance_to(pivot_doc)
-
-        out = sorted(heap, key=lambda e: (-e[0], -e[1]))
-        return [(-d, s) for s, d in out]
+        if algorithm != "auto":
+            raise ValueError(
+                f"algorithm must be 'auto' or 'chunkmax', got {algorithm!r}"
+            )
+        return _topk(*self._scored(query_text), k)
 
     def _read_term_meta(self, term: str):
         """Header-only term read for the chunkmax cold path: per payload row
@@ -1100,12 +972,12 @@ class IndexSearcher:
         Phase 1 reads each term's payload rows but parses only headers +
         skip tables (codec.read_payload_meta): df (=> exact idf) from the
         header counts, and a per-(term, chunk) upper bound from the block
-        (max_tf, min_dl) maxima — the same bound the BMW cursors use, but
-        available BEFORE any varbyte decode. Phase 2 walks chunks in
-        descending summed-UB order, decoding only the visited chunk's
-        payloads, exact-scoring its docs with the canonical ascending-term
-        scatter-add, and STOPS once the next chunk's UB is strictly below
-        the current kth score (>= must continue: an equal score can still
+        (max_tf, min_dl) maxima — the block-max WAND bound, but available
+        BEFORE any varbyte decode. Phase 2 visits chunks in descending
+        summed-UB order, decoding only the visited chunks' payloads,
+        exact-scoring their docs with the canonical ascending-term
+        scatter-add, and skips every chunk whose UB is strictly below the
+        current kth score (>= must be visited: an equal score can still
         win the doc_id tie-break). Safe pruning at chunk grain => exact
         top-k while only the competitive fraction of postings is decoded —
         the cold-query contract BENCH.md documents (a 5-head-term query
@@ -1119,8 +991,8 @@ class IndexSearcher:
         Honest measurement: on the UNIFORM synthetic bench corpus block
         maxima are nearly flat and chunk UBs cannot separate (1-17% of
         payloads pruned, measured at 60k conversations); with pool-parallel
-        per-term decode the mode still runs at parity with the batched
-        exhaustive cold path there (sf0.1 best-of-3: 0.51s vs 0.52s) —
+        per-term decode the mode still runs at parity with search()'s
+        batched cold path there (sf0.1 best-of-3: 0.51s vs 0.52s) —
         bench.py records both (wand_cold_max_s vs wand_cold_chunkmax_max_s).
         On skewed tf distributions — the real-corpus shape — the bounds
         separate, pass 2 shrinks toward empty, and >70% of payload decodes
@@ -1167,30 +1039,8 @@ class IndexSearcher:
             ((sum(tm.values()), c) for c, tm in ub_chunk_term.items()),
             key=lambda x: (-x[0], x[1]),
         )
-        # Two batched passes so the varbyte decode stays batched
-        # (decode_postings_many's fixed costs dominated a per-chunk loop —
-        # measured 2-3x slower than exhaustive on uniform corpora):
-        # pass 1 scores the top-64 chunks by UB to establish the kth-score
-        # threshold; pass 2 scores every remaining chunk whose UB can still
-        # reach it, in ONE decode batch. Skewed corpora leave pass 2 nearly
-        # empty (the win); flat-UB corpora degrade gracefully to ~the
-        # exhaustive path's one batched decode instead of paying per-group
-        # overhead on every group.
-        group_sz = 64
-        heap: list[tuple[float, int]] = []
-        pos = 0
-        first_pass = True
-        while pos < len(order):
-            th = heap[0][0] if len(heap) == k else -np.inf
-            if first_pass:
-                group = order[pos : pos + group_sz]
-                pos += len(group)
-                first_pass = False
-            else:
-                group = [(ub, c) for ub, c in order[pos:] if ub >= th]
-                pos = len(order)
-            if not group or (len(heap) == k and group[0][0] < th):
-                break  # no doc in any remaining chunk can enter the top-k
+
+        def _score_group(group):
             def _decode_term(ti):
                 # batch the group's payloads per underlying Arrow buffer;
                 # the varbyte decode releases the GIL, so terms decode
@@ -1209,124 +1059,97 @@ class IndexSearcher:
                     )
                     for data, ss, ee in by_buf.values()
                 ]
-                if len(parts) == 1:
-                    d, tf, dl = parts[0]
-                else:
-                    d = np.concatenate([p[0] for p in parts])
-                    tf = np.concatenate([p[1] for p in parts])
-                    dl = np.concatenate([p[2] for p in parts])
-                return (ti, d, tf, dl)
-
-            decoded = [
-                r
-                for r in _pool().map(_decode_term, range(len(present)))
-                if r is not None
-            ]  # map preserves order => ascending term
-            if not decoded:
-                continue
-            total = sum(len(d) for _, d, _, _ in decoded)
-            if total * 2 >= self.n_docs and len(decoded) > 1:
-                # dense group: scatter over the cached sorted live-doc
-                # domain instead of sorting the concatenation (same trick
-                # as _scored_arrays' head-term regime; adds are still the
-                # ascending-term sequence, so scores stay bit-identical)
-                base = self._all_live_docs()
-                scores_full = np.zeros(len(base), np.float64)
-                hit = np.zeros(len(base), bool)
-                idxs = list(
-                    _pool().map(
-                        lambda r: np.searchsorted(base, r[1]), decoded
-                    )
+                d, tf, dl = (
+                    parts[0]
+                    if len(parts) == 1
+                    else (np.concatenate(c) for c in zip(*parts))
                 )
-                for (ti, d, tf, dl), idx in zip(decoded, idxs):
-                    # sequential adds, ascending term => bit-identical
-                    scores_full[idx] += self._contrib(idfs[ti], tf, dl)
-                    hit[idx] = True
-                uniq, scores = base[hit], scores_full[hit]
-            else:
-                uniq = np.unique(np.concatenate([d for _, d, _, _ in decoded]))
-                scores = np.zeros(len(uniq), np.float64)
-                idxs = list(
-                    _pool().map(
-                        lambda r: np.searchsorted(uniq, r[1]), decoded
-                    )
-                )
-                for (ti, d, tf, dl), idx in zip(decoded, idxs):
-                    # sequential adds, ascending term => bit-identical
-                    scores[idx] += self._contrib(idfs[ti], tf, dl)
-            cand = scores >= th  # ties can win via doc_id
-            cd, cs = uniq[cand], scores[cand]
-            if len(cd) > 4 * k:
-                # vectorized cut to the k best by (score desc, doc asc)
-                # before the python heap loop: keep everything above the
-                # kth-largest score, plus the k smallest docids among its
-                # exact ties — no excluded row can enter the top-k
-                kth = -np.partition(-cs, k - 1)[k - 1]
-                above = np.flatnonzero(cs > kth)
-                ties = np.flatnonzero(cs == kth)
-                if len(ties) > k:
-                    ties = ties[np.argpartition(cd[ties], k - 1)[:k]]
-                keep = np.concatenate([above, ties])
-                cd, cs = cd[keep], cs[keep]
-            for i in np.lexsort((cd, -cs)):
-                entry = (float(cs[i]), -int(cd[i]))
-                if len(heap) < k:
-                    heapq.heappush(heap, entry)
-                elif entry > heap[0]:
-                    heapq.heapreplace(heap, entry)
-        out = sorted(heap, key=lambda e: (-e[0], -e[1]))
-        return [(-d, s) for s, d in out]
+                return d, self._contrib(idfs[ti], tf, dl)
 
-    def _scored_arrays(self, cursors: list[_TermCursor]):
-        """(docids, scores) for every candidate of the term set: per-term
-        scatter-add in ascending-term order (cursors arrive term-sorted) —
-        bit-identical to the oracle's summation (adding an explicit 0.0 for
-        absent terms is an IEEE no-op; pandas/np grouped sums are NOT used
-        because their accumulation order is pairwise). Cached per term-set
-        — the index is immutable, so repeat queries are pure cache hits."""
-        key = tuple(c.term for c in cursors)
+            # map preserves order => ascending term
+            return self._accumulate(
+                [
+                    p
+                    for p in _pool().map(_decode_term, range(len(present)))
+                    if p is not None
+                ]
+            )
+
+        # Two batched passes so the varbyte decode stays batched
+        # (decode_postings_many's fixed costs dominated a per-chunk loop —
+        # measured 2-3x slower than exhaustive on uniform corpora):
+        # pass 1 scores the top-64 chunks by UB to establish the kth-score
+        # threshold; pass 2 scores every remaining chunk whose UB can still
+        # reach it (>=: an equal score can still win the doc_id tie-break),
+        # in ONE decode batch. Skewed corpora leave pass 2 nearly empty (the
+        # win); flat-UB corpora degrade gracefully to ~one batched decode.
+        # Chunks are docid ranges, so the two passes score disjoint docs.
+        group_sz = 64
+        docids, scores = _score_group(order[:group_sz])
+        top = _topk(docids, scores, k)
+        th = top[-1][1] if len(top) == k else -np.inf
+        rest = [(ub, c) for ub, c in order[group_sz:] if ub >= th]
+        if not rest:
+            return top
+        d2, s2 = _score_group(rest)
+        keep = s2 >= th
+        return _topk(
+            np.concatenate([docids, d2[keep]]),
+            np.concatenate([scores, s2[keep]]),
+            k,
+        )
+
+    def _scored(self, query_text: str) -> tuple[np.ndarray, np.ndarray]:
+        """(docids, scores) for every doc matching any query term, scored
+        exactly by :meth:`_accumulate` over the cached per-term
+        contributions. Cached per term-set — the index is immutable, so
+        repeat queries are pure cache hits."""
+        terms = sorted(set(tokenize_string(query_text)))
+        self.prefetch_terms(terms)
+        present = [
+            (t, got)
+            for t, got in zip(terms, map(self._read_term, terms))
+            if got is not None
+        ]
+        if not present or self.n_docs == 0:
+            return np.zeros(0, np.int64), np.zeros(0, np.float64)
+        key = tuple(t for t, _ in present)
         hit = self._scored_cache.get(key)
         if hit is not None:
             return hit
-        if len(cursors) == 1:
-            c = cursors[0]
-            return c.docids, c.contribs_full()
-        total = sum(len(c.docids) for c in cursors)
-        if total * 2 >= self.n_docs and len(cursors) > 1:
+        out = self._accumulate([(got[0], got[3]) for _, got in present])
+        if len(present) > 1:
+            if len(self._scored_cache) >= 64:
+                self._scored_cache.pop(next(iter(self._scored_cache)))
+            self._scored_cache[key] = out
+        return out
+
+    def _accumulate(self, parts) -> tuple[np.ndarray, np.ndarray]:
+        """(docids, scores) over the union of the parts' docids: each
+        (docids, contribs) part — one per term, in ascending term order —
+        is scatter-added sequentially, so every doc's score is the
+        oracle's ascending-term sum bit for bit (an absent term adds
+        nothing; np/pandas grouped sums are NOT used because their
+        accumulation order is pairwise). A lone part is returned as is."""
+        if len(parts) == 1:
+            return parts[0]
+        if sum(len(d) for d, _ in parts) * 2 >= self.n_docs:
             # head-term regime: the candidate set approaches the corpus, so
             # scatter-add over the (cached, sorted) full live-doc domain and
             # drop never-hit docs — skips the O(total log total) sort of the
-            # concatenated docids, the cold-query bottleneck for dense
-            # terms. Accumulation per doc is the same ascending-term
-            # sequence of adds, so scores stay bit-identical.
+            # concatenated docids, the cold-query bottleneck for dense terms
             base = self._all_live_docs()
-            scores_full = np.zeros(len(base), dtype=np.float64)
-            hit = np.zeros(len(base), dtype=bool)
-            # the searchsorted legs are independent and GIL-releasing —
-            # compute them in the pool; the scatter-adds below stay
-            # SEQUENTIAL in ascending term order (bit-identical scores)
-            idxs = list(
-                _pool().map(lambda c: np.searchsorted(base, c.docids), cursors)
-            )
-            for c, idx in zip(cursors, idxs):  # ascending term order
-                scores_full[idx] += c.contribs_full()
-                hit[idx] = True
-            uniq, scores = base[hit], scores_full[hit]
-            if len(self._scored_cache) >= 64:
-                self._scored_cache.pop(next(iter(self._scored_cache)))
-            self._scored_cache[key] = (uniq, scores)
-            return uniq, scores
-        uniq = np.unique(np.concatenate([c.docids for c in cursors]))
-        scores = np.zeros(len(uniq), dtype=np.float64)
-        idxs = list(
-            _pool().map(lambda c: np.searchsorted(uniq, c.docids), cursors)
-        )
-        for c, idx in zip(cursors, idxs):  # ascending term order
-            scores[idx] += c.contribs_full()
-        if len(self._scored_cache) >= 64:
-            self._scored_cache.pop(next(iter(self._scored_cache)))
-        self._scored_cache[key] = (uniq, scores)
-        return uniq, scores
+        else:
+            base = np.unique(np.concatenate([d for d, _ in parts]))
+        scores = np.zeros(len(base), np.float64)
+        hit = np.zeros(len(base), bool)
+        # the searchsorted legs are independent and GIL-releasing — run
+        # them in the pool; the adds below stay sequential
+        idxs = _pool().map(lambda p: np.searchsorted(base, p[0]), parts)
+        for (_d, contribs), idx in zip(parts, idxs):
+            scores[idx] += contribs
+            hit[idx] = True
+        return base[hit], scores[hit]
 
     def search_after(
         self, query_text: str, after: tuple[float, int], k: int = 10
@@ -1338,29 +1161,10 @@ class IndexSearcher:
         returned (scores are deterministic — canonical accumulation), so
         the strict-after filter is an exact comparison, like Lucene's
         FieldDoc cursor."""
-        terms = sorted(set(tokenize_string(query_text)))
-        self.prefetch_terms(terms)
-        cursors: list[_TermCursor] = []
-        for t in terms:
-            got = self._read_term(t)
-            if got is None:
-                continue
-            docids, tfs, dls, contribs, idf = got
-            cursors.append(_TermCursor(t, idf, docids, tfs, dls, contribs))
-        if not cursors or self.n_docs == 0:
-            return []
-        uniq, scores = self._scored_arrays(cursors)
+        uniq, scores = self._scored(query_text)
         s0, d0 = float(after[0]), int(after[1])
         qual = (scores < s0) | ((scores == s0) & (uniq > d0))
-        uniq, scores = uniq[qual], scores[qual]
-        if not len(uniq):
-            return []
-        if len(uniq) > k:
-            kth = -np.partition(-scores, k - 1)[k - 1]
-            keep = scores >= kth
-            uniq, scores = uniq[keep], scores[keep]
-        order = np.lexsort((uniq, -scores))[:k]
-        return [(int(uniq[i]), float(scores[i])) for i in order]
+        return _topk(uniq[qual], scores[qual], k)
 
     # ---- suggesters: interactive did-you-mean / completion from the
     # term-sorted dictionary sidecar, loaded once per searcher. The Lucene
@@ -1440,16 +1244,3 @@ class IndexSearcher:
         return [
             (str(cand_t[i]), int(dist[i]), int(cand_df[i])) for i in order
         ]
-
-    def _search_exhaustive(self, cursors: list[_TermCursor], k: int):
-        """Exact top-k from the vectorized candidate scoring
-        (:meth:`_scored_arrays`)."""
-        uniq, scores = self._scored_arrays(cursors)
-        if len(uniq) > k:
-            # keep everything tied-or-above the k-th score so the docid
-            # tie-break stays exact, then sort only that subset
-            kth = -np.partition(-scores, k - 1)[k - 1]
-            keep = scores >= kth
-            uniq, scores = uniq[keep], scores[keep]
-        order = np.lexsort((uniq, -scores))[:k]
-        return [(int(uniq[i]), float(scores[i])) for i in order]

@@ -88,6 +88,33 @@ def test_ntile_more_buckets_than_rows(spark):
     assert list(got.tile) == [1, 2, 3, 4, 5, 6]
 
 
+def test_empty_frame_ranks_and_tiles_empty(spark):
+    """An empty input has no partitions, hence no offsets: both helpers
+    must return an empty result instead of failing analysis."""
+    from lucene_mapreduce_spark.operators.parity import distributed_ntile
+
+    df = spark.range(0, 10).filter("id < 0").withColumn("_ord", F.col("id"))
+    ranked = distributed_row_number(df, "_ord", "i")
+    assert ranked.collect() == [] and "i" in ranked.columns
+    tiled = distributed_ntile(df, "_ord", 4, "tile")
+    assert tiled.collect() == [] and "tile" in tiled.columns
+
+
+def test_window_audit_passes():
+    """tools/audit_windows.py: every unpartitioned global window is
+    classified and the row-scale class is empty."""
+    import importlib.util
+    import os
+
+    path = os.path.join(
+        os.path.dirname(os.path.dirname(__file__)), "tools", "audit_windows.py"
+    )
+    spec = importlib.util.spec_from_file_location("audit_windows", path)
+    audit = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(audit)
+    assert audit.main() == 0
+
+
 def test_running_sum_max_match_global_window(spark):
     """distributed_running == the single-partition running sum/max window
     on a total order (the heaps/watermark promotion shapes)."""

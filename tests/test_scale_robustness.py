@@ -460,10 +460,7 @@ def test_multigen_wand_matches_merged(spark, tmp_path):
     sa, sb = IndexSearcher(ix_a), IndexSearcher(ix_b)
     assert sa.n_docs == sb.n_docs and sa.avgdl == sb.avgdl
     for q in ("t1 t2", "t5", "t10 t20 t30", "stale"):
-        for algo in ("wand", "exhaustive"):
-            assert sa.search(q, k=10, algorithm=algo) == sb.search(
-                q, k=10, algorithm=algo
-            ), f"mismatch on {q!r}/{algo}"
+        assert sa.search(q, k=10) == sb.search(q, k=10), f"mismatch on {q!r}"
 
 
 def test_hot_phrase_distributed_paths_bounded(spark, tmp_path):

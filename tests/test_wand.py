@@ -55,11 +55,29 @@ def test_wand_rank_identity(merged_index):
     for q in WAND_QUERIES:
         for k in (1, 3, 10, 50):
             exp = bm25_oracle_pandas(pdf, q, k=k)
-            for algo in ("wand", "exhaustive"):
-                got = searcher.search(q, k=k, algorithm=algo)
-                assert [d for d, _ in got] == list(exp.doc_id), f"{algo} {q!r} k={k} docids"
-                for (d, s), es in zip(got, exp.score):
-                    assert s == es, f"{algo} {q!r} k={k} doc {d}: {s!r} != {es!r}"
+            got = searcher.search(q, k=k)
+            assert [d for d, _ in got] == list(exp.doc_id), f"{q!r} k={k} docids"
+            for (d, s), es in zip(got, exp.score):
+                assert s == es, f"{q!r} k={k} doc {d}: {s!r} != {es!r}"
+
+
+def test_search_rejects_unknown_algorithm(merged_index):
+    searcher = IndexSearcher(merged_index[0])
+    for algo in ("wand", "exhaustive", "Auto", ""):
+        with pytest.raises(ValueError, match="algorithm"):
+            searcher.search("tok00000", k=3, algorithm=algo)
+
+
+def test_posting_cache_is_lru(merged_index):
+    """A cache hit refreshes the entry, so a hot term outlives colder
+    inserts instead of being evicted in insertion order."""
+    searcher = IndexSearcher(merged_index[0])
+    searcher._cache_cap = 2
+    for t in ("tok00000", "tok00001", "tok00000", "tok00002"):
+        searcher._read_term(t)
+    assert list(searcher._cache) == ["tok00000", "tok00002"]
+    searcher.clear_caches()
+    assert not searcher._cache and not searcher._scored_cache
 
 
 def test_wand_tied_scores_tiebreak(spark, tmp_path):

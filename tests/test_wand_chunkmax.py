@@ -117,7 +117,7 @@ def test_chunkmax_prunes_decode(merged_index, monkeypatch):
     pruned = calls["payloads"]
     calls["n"] = calls["payloads"] = 0
     s2 = wand_mod.IndexSearcher(index_dir)
-    s2.search(q, k=3, algorithm="exhaustive")
+    s2.search(q, k=3)
     full = calls["payloads"]
     assert pruned < full, (pruned, full)
 
@@ -161,7 +161,7 @@ def test_chunkmax_prunes_hard_on_skewed_corpus(spark, tmp_path):
         got = s.search("hot", k=4, algorithm="chunkmax")
         cm = calls["payloads"]
         calls["payloads"] = 0
-        exp = s2.search("hot", k=4, algorithm="exhaustive")
+        exp = s2.search("hot", k=4)
         full = calls["payloads"]
     finally:
         wand_mod.decode_postings_many = real

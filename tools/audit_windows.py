@@ -38,7 +38,7 @@ marked row-scale):
              way before it can land.
 
 Usage: python tools/audit_windows.py   (prints the table; exit 1 on
-unclassified sites)
+unclassified sites or a non-empty row-scale class)
 """
 from __future__ import annotations
 
@@ -241,6 +241,10 @@ def main() -> int:
         print("\nUNCLASSIFIED (add to CLASS or repartition):")
         for rel, line, fn in missing:
             print(f"  {rel}:{line}  in {fn}")
+        return 1
+    if by_cat.get("row-scale"):
+        print("\nrow-scale must stay empty: promote these sites to the "
+              "distributed rank/ntile/running helpers")
         return 1
     print("\nall sites classified")
     return 0
