@@ -2,7 +2,6 @@ from lucene_mapreduce_spark.functions.tokenize import (
     TOKEN_SPLIT_RE,
     duckdb_tokens_sql,
     tokenize_col,
-    tokenize_pandas_udf,
     tokenize_string,
 )
 
@@ -10,6 +9,5 @@ __all__ = [
     "TOKEN_SPLIT_RE",
     "duckdb_tokens_sql",
     "tokenize_col",
-    "tokenize_pandas_udf",
     "tokenize_string",
 ]

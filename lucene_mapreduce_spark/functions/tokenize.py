@@ -10,10 +10,11 @@ pinned explicitly to the ASCII set ``[ \\t\\n\\r\\f\\x0B]`` rather than
 relying on each regex engine's notion of ``\\s`` (Java and RE2 disagree on
 ``\\x0B``).
 
-Three implementations of one spec:
-- ``tokenize_col``          — pure built-in Spark expression (JVM codegen'd)
-- ``tokenize_pandas_udf``   — vectorized Arrow UDF (the build pipeline default,
-                              per the mandated Arrow-UDF surface)
+Implementations of one spec:
+- ``tokenize_col``          — pure built-in Spark expression (JVM codegen'd),
+                              used by the query and scan paths
+- the index build's vectorized Arrow split (``ascii_split_whitespace`` plus an
+  empty-token filter, in ``index/kernels.py``)
 - ``tokenize_string`` / ``duckdb_tokens_sql`` — oracle-side twins
 
 ``test_tokenize.py`` asserts all implementations agree on adversarial input.
@@ -23,10 +24,8 @@ from __future__ import annotations
 
 import re
 
-import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 # One whitespace class, three regex dialects (identical semantics).
 _WS_CLASS = " \\t\\n\\r\\f\\x0B"
@@ -45,26 +44,10 @@ def tokenize_string(s: str | None) -> list[str]:
 def tokenize_col(col: Column | str) -> Column:
     """Spark built-in tokenizer: array<string> of non-empty tokens.
 
-    Stays inside whole-stage codegen — the fastest path; used where the
-    Arrow-UDF surface is not required (e.g. oracle-matched SQL queries).
+    Stays inside whole-stage codegen.
     """
     c = F.col(col) if isinstance(col, str) else col
     return F.filter(F.split(c, _JAVA_SPLIT), lambda x: x != F.lit(""))
-
-
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def tokenize_pandas_udf(texts: pd.Series) -> pd.Series:
-    """Vectorized Arrow tokenizer (the index-build default).
-
-    Same spec as ``tokenize_col``; batch-level, no per-row Python UDF.
-    """
-
-    def _tok(s):
-        if s is None:
-            return []
-        return [t for t in TOKEN_SPLIT_RE.split(s) if t]
-
-    return texts.map(_tok)
 
 
 def duckdb_tokens_sql(text_expr: str) -> str:

@@ -12,7 +12,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from lucene_mapreduce_spark.operators.parity import load
-from lucene_mapreduce_spark.query.bm25_df import bm25_scan_topk, corpus_postings
+from lucene_mapreduce_spark.query.bm25_df import (
+    bm25_contrib_col,
+    bm25_idf_col,
+    bm25_scan_topk,
+    canonical_sum,
+    corpus_postings,
+)
 
 # Flagship query text (terms drawn from the documents vocabulary: mixed df).
 FLAGSHIP_QUERY = "table scan fast merge"
@@ -731,11 +737,7 @@ def tfidf_topk(
         "doc_id", "term", contrib.alias("contrib")
     )
     per_doc = scored.groupBy("doc_id").agg(
-        F.aggregate(
-            F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["contrib"],
-        ).alias("score")
+        canonical_sum("contrib", "term").alias("score")
     )
     from lucene_mapreduce_spark.operators.parity import ranked_topk
 
@@ -1414,7 +1416,6 @@ def synonym_query(
     hazard anywhere before the single scoring expression.
     Oracle: the same blend spelled in SQL (synonym_sql)."""
     from lucene_mapreduce_spark.operators.parity import ranked_topk
-    from lucene_mapreduce_spark.query.bm25 import B, K1
     from lucene_mapreduce_spark.query.segments import exact_stats, read_postings
 
     ix = _gate_index(spark, sf_dir)
@@ -1429,17 +1430,9 @@ def synonym_query(
         F.sum("tf").cast("double").alias("tf"),
         F.max("dl").cast("double").alias("dl"),
     )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("df_b") + F.lit(0.5))
-        / (F.col("df_b") + F.lit(0.5))
-    )
-    denom = F.col("tf") + F.lit(K1) * (
-        F.lit(1.0 - B) + F.lit(B) * F.col("dl") / F.lit(float(avgdl))
-    )
+    contrib = bm25_contrib_col("tf", "dl", avgdl, bm25_idf_col("df_b", n_docs))
     scored = blended.crossJoin(F.broadcast(dfb)).select(
-        "doc_id",
-        F.round(idf * (F.col("tf") * F.lit(K1 + 1.0)) / denom, 6).alias("score"),
+        "doc_id", F.round(contrib, 6).alias("score")
     )
     return ranked_topk(scored, [F.desc("score"), F.asc("doc_id")], k).select(
         "doc_id", "score", "rank"
@@ -1651,7 +1644,6 @@ def explain_scores(
     matching docs (that IS the statistic) but the explained doc's rows
     reduce to a handful joined against the broadcast df frame."""
     from lucene_mapreduce_spark.functions.tokenize import tokenize_string
-    from lucene_mapreduce_spark.query.bm25 import B, K1
     from lucene_mapreduce_spark.query.segments import exact_stats, read_postings
 
     ix = _gate_index(spark, sf_dir)
@@ -1662,22 +1654,16 @@ def explain_scores(
     row = posts.filter(F.col("doc_id") == F.lit(doc_id)).join(
         F.broadcast(df_t), "term"
     )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("df_t").cast("double") + F.lit(0.5))
-        / (F.col("df_t").cast("double") + F.lit(0.5))
-    )
-    tf = F.col("tf").cast("double")
-    dl = F.col("dl").cast("double")
-    denom = tf + F.lit(K1) * (
-        F.lit(1.0 - B) + F.lit(B) * dl / F.lit(float(avgdl))
+    idf = bm25_idf_col(F.col("df_t").cast("double"), n_docs)
+    contrib = bm25_contrib_col(
+        F.col("tf").cast("double"), F.col("dl").cast("double"), avgdl, idf
     )
     return row.select(
         "term",
         F.col("tf").cast("long").alias("tf"),
         F.col("df_t").cast("long").alias("df_t"),
         F.round(idf, 6).alias("idf"),
-        F.round(idf * (tf * F.lit(K1 + 1.0)) / denom, 6).alias("contrib"),
+        F.round(contrib, 6).alias("contrib"),
     )
 
 
@@ -2129,14 +2115,7 @@ def lmdirichlet_topk(
     )
     scored = j.select("doc_id", "term", contrib.alias("contrib"))
     agg = scored.groupBy("doc_id").agg(
-        F.round(
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["contrib"],
-            ),
-            6,
-        ).alias("score")
+        F.round(canonical_sum("contrib", "term"), 6).alias("score")
     )
     return ranked_topk(agg, [F.desc("score"), F.asc("doc_id")], k).select(
         "doc_id", "score", "rank"
@@ -2534,25 +2513,14 @@ def bm25f_topk(
         F.lit(float(w_text)) * F.col("tf_text") / norm
         + F.lit(float(w_kw)) * F.col("tf_kw")
     )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("df_any") + F.lit(0.5))
-        / (F.col("df_any") + F.lit(0.5))
-    )
+    idf = bm25_idf_col("df_any", n_docs)
     contribs = m.join(F.broadcast(dfa), "term").select(
         "doc_id",
         "term",
         (idf * tfn / (F.lit(K1) + tfn)).alias("contrib"),
     )
     per_doc = contribs.groupBy("doc_id").agg(
-        F.round(
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["contrib"],
-            ),
-            6,
-        ).alias("score")
+        F.round(canonical_sum("contrib", "term"), 6).alias("score")
     )
     return ranked_topk(per_doc, [F.desc("score"), F.asc("doc_id")], k).select(
         "doc_id", "score", "rank"
@@ -2719,14 +2687,7 @@ def lmjelinekmercer_topk(
     )
     scored = j.select("doc_id", "term", contrib.alias("contrib"))
     agg = scored.groupBy("doc_id").agg(
-        F.round(
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["contrib"],
-            ),
-            6,
-        ).alias("score")
+        F.round(canonical_sum("contrib", "term"), 6).alias("score")
     )
     return ranked_topk(agg, [F.desc("score"), F.asc("doc_id")], k).select(
         "doc_id", "score", "rank"
@@ -3744,25 +3705,14 @@ def combined_fields_query(
     norm = F.lit(K1) * (
         F.lit(1.0 - B) + F.lit(B) * dlc / F.lit(avgdl_c)
     )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("df_any") + F.lit(0.5))
-        / (F.col("df_any") + F.lit(0.5))
-    )
+    idf = bm25_idf_col("df_any", n_docs)
     contribs = m.join(F.broadcast(dfa), "term").select(
         "doc_id",
         "term",
         (idf * tfc * F.lit(K1 + 1.0) / (tfc + norm)).alias("contrib"),
     )
     per_doc = contribs.groupBy("doc_id").agg(
-        F.round(
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["contrib"],
-            ),
-            6,
-        ).alias("score")
+        F.round(canonical_sum("contrib", "term"), 6).alias("score")
     )
     return ranked_topk(per_doc, [F.desc("score"), F.asc("doc_id")], k).select(
         "doc_id", "score", "rank"
@@ -4211,14 +4161,7 @@ def dfr_topk(
     contrib = tfn * info / (F.lit(1.0) + tfn)
     scored = j.select("doc_id", "term", contrib.alias("contrib"))
     agg = scored.groupBy("doc_id").agg(
-        F.round(
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["contrib"],
-            ),
-            6,
-        ).alias("score")
+        F.round(canonical_sum("contrib", "term"), 6).alias("score")
     )
     return ranked_topk(agg, [F.desc("score"), F.asc("doc_id")], k).select(
         "doc_id", "score", "rank"
@@ -4268,16 +4211,7 @@ def dfi_topk(
     scored = j.select("doc_id", "term", contrib.alias("contrib"))
     agg = (
         scored.groupBy("doc_id")
-        .agg(
-            F.round(
-                F.aggregate(
-                    F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x["contrib"],
-                ),
-                6,
-            ).alias("score")
-        )
+        .agg(F.round(canonical_sum("contrib", "term"), 6).alias("score"))
         .where(F.col("score") > 0.0)
     )
     return ranked_topk(agg, [F.desc("score"), F.asc("doc_id")], k).select(
@@ -4329,14 +4263,7 @@ def axiomatic_topk(
     contrib = tfln * idf
     scored = j.select("doc_id", "term", contrib.alias("contrib"))
     agg = scored.groupBy("doc_id").agg(
-        F.round(
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["contrib"],
-            ),
-            6,
-        ).alias("score")
+        F.round(canonical_sum("contrib", "term"), 6).alias("score")
     )
     return ranked_topk(agg, [F.desc("score"), F.asc("doc_id")], k).select(
         "doc_id", "score", "rank"
@@ -4479,11 +4406,7 @@ def rocchio_prf_topk(
             .join(doclens, "doc_id")
             .crossJoin(F.broadcast(stats))
         )
-        idf = F.log(
-            F.lit(1.0)
-            + (F.col("n_docs") - F.col("df_t") + F.lit(0.5))
-            / (F.col("df_t") + F.lit(0.5))
-        )
+        idf = bm25_idf_col("df_t", "n_docs")
         tfn = (
             F.col("tf")
             * F.lit(K1 + 1.0)
@@ -4499,14 +4422,7 @@ def rocchio_prf_topk(
 
     def fold_topk(c: DataFrame, depth: int) -> DataFrame:
         agg = c.groupBy("doc_id").agg(
-            F.round(
-                F.aggregate(
-                    F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x["contrib"],
-                ),
-                6,
-            ).alias("score")
+            F.round(canonical_sum("contrib", "term"), 6).alias("score")
         )
         return ranked_topk(agg, [F.desc("score"), F.asc("doc_id")], depth)
 
@@ -4581,14 +4497,7 @@ def ib_topk(
     contrib = F.log(F.lit(1.0) + tfn / lam)
     scored = j.select("doc_id", "term", contrib.alias("contrib"))
     agg = scored.groupBy("doc_id").agg(
-        F.round(
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["contrib"],
-            ),
-            6,
-        ).alias("score")
+        F.round(canonical_sum("contrib", "term"), 6).alias("score")
     )
     return ranked_topk(agg, [F.desc("score"), F.asc("doc_id")], k).select(
         "doc_id", "score", "rank"
@@ -4748,11 +4657,7 @@ def most_fields_topk(
         .crossJoin(F.broadcast(stats))
         .select(
             "doc_id",
-            F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("dfk") + F.lit(0.5))
-                / (F.col("dfk") + F.lit(0.5))
-            ).alias("kscore"),
+            bm25_idf_col("dfk", "n_docs").alias("kscore"),
         )
     )
     fused = tleg.join(kleg, "doc_id", "full_outer").select(
@@ -4940,29 +4845,13 @@ def bm25_tuned_topk(
         .join(dls, "doc_id")
         .crossJoin(F.broadcast(stats))
     )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs") - F.col("df_t") + F.lit(0.5)) / (F.col("df_t") + F.lit(0.5))
-    )
-    dl = F.col("dl").cast("double")
-    contrib = (
-        idf
-        * (F.col("tf") * F.lit(k1 + 1.0))
-        / (F.col("tf") + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl / F.col("avgdl")))
+    contrib = bm25_contrib_col(
+        "tf", F.col("dl").cast("double"), "avgdl", bm25_idf_col("df_t", "n_docs"), k1, b
     )
     per_doc = (
         matched.select("doc_id", "term", contrib.alias("contrib"))
         .groupBy("doc_id")
-        .agg(
-            F.round(
-                F.aggregate(
-                    F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x["contrib"],
-                ),
-                6,
-            ).alias("score")
-        )
+        .agg(F.round(canonical_sum("contrib", "term"), 6).alias("score"))
     )
     return ranked_topk(per_doc, [F.desc("score"), F.asc("doc_id")], k).select(
         "doc_id", "score", "rank"
@@ -5175,10 +5064,7 @@ def query_difficulty_predictors(
             F.count(F.lit(1)).cast("double").alias("cf"),
         )
     )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("df") + F.lit(0.5)) / (F.col("df") + F.lit(0.5))
-    )
+    idf = bm25_idf_col("df", n_docs)
     per_term = regdf.join(F.broadcast(stats), "term").select(
         "query_id",
         "term",
@@ -5188,23 +5074,11 @@ def query_difficulty_predictors(
     folded = per_term.groupBy("query_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_terms"),
         F.round(
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("term", "idf"))),
-                F.lit(0.0),
-                lambda a, x: a + x["idf"],
-            )
-            / F.count(F.lit(1)).cast("double"),
+            canonical_sum("idf", "term") / F.count(F.lit(1)).cast("double"),
             6,
         ).alias("avg_idf"),
         F.round(F.max("idf"), 6).alias("max_idf"),
-        F.round(
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("term", "scq_t"))),
-                F.lit(0.0),
-                lambda a, x: a + x["scq_t"],
-            ),
-            6,
-        ).alias("scq"),
+        F.round(canonical_sum("scq_t", "term"), 6).alias("scq"),
     )
     return folded.orderBy("query_id")
 
@@ -5473,11 +5347,7 @@ def cross_fields_topk(
             .alias("df_b"),
         )
     )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("df_b") + F.lit(0.5))
-        / (F.col("df_b") + F.lit(0.5))
-    )
+    idf = bm25_idf_col("df_b", n_docs)
     dls = live_doclens(spark, ix).select("doc_id", "dl")
     tleg = (
         tp.join(dls, "doc_id")
@@ -5512,14 +5382,7 @@ def cross_fields_topk(
         "doc_id", "term", (idf * F.col("sat_best")).alias("contrib")
     )
     per_doc = contribs.groupBy("doc_id").agg(
-        F.round(
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["contrib"],
-            ),
-            6,
-        ).alias("score")
+        F.round(canonical_sum("contrib", "term"), 6).alias("score")
     )
     return ranked_topk(per_doc, [F.desc("score"), F.asc("doc_id")], k).select(
         "doc_id", "score", "rank"
@@ -6147,27 +6010,15 @@ def bm25plus_topk(
         .join(dl, "doc_id")
         .crossJoin(F.broadcast(stats))
     )
-    idf = F.log(
-        F.lit(1.0) + (F.col("n_docs") - F.col("df_t") + 0.5) / (F.col("df_t") + 0.5)
-    )
+    idf = bm25_idf_col("df_t", "n_docs")
     sat = (F.col("tf") * F.lit(K1 + 1.0)) / (
         F.col("tf") + F.lit(K1) * (1 - B + B * F.col("dl") / F.col("avgdl"))
     )
     contrib = idf * (sat + F.lit(delta))
-    # canonical ascending-term sequential fold (determinism spec)
     agg = (
         j.select("doc_id", "term", contrib.alias("c"))
         .groupBy("doc_id")
-        .agg(
-            F.aggregate(
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("term", "c"))),
-                    lambda s: s["c"],
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("score")
-        )
+        .agg(canonical_sum("c", "term").alias("score"))
         .select("doc_id", F.round("score", 6).alias("score"))
     )
     return ranked_topk(agg, [F.desc("score"), F.asc("doc_id")], k).select(
@@ -6318,11 +6169,7 @@ def rm3_expansion_terms(
     )
     qts = sorted(set(tokenize_string(query_text)))
     qdf = spark.createDataFrame([(t,) for t in qts], "term string")
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs") - F.col("df_t") + F.lit(0.5))
-        / (F.col("df_t") + F.lit(0.5))
-    )
+    idf = bm25_idf_col("df_t", "n_docs")
     tfn = (
         F.col("tf")
         * F.lit(K1 + 1.0)
@@ -6340,14 +6187,7 @@ def rm3_expansion_terms(
         .select("doc_id", "term", (idf * tfn).alias("contrib"))
     )
     s1 = c1.groupBy("doc_id").agg(
-        F.round(
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["contrib"],
-            ),
-            6,
-        ).alias("score")
+        F.round(canonical_sum("contrib", "term"), 6).alias("score")
     )
     feedback = ranked_topk(
         s1, [F.desc("score"), F.asc("doc_id")], fb_k
@@ -6496,7 +6336,6 @@ def ltr_feature_log(
     joins; features ride the same groupBy that folds the score."""
     from lucene_mapreduce_spark.functions.tokenize import tokenize_string
     from lucene_mapreduce_spark.operators.parity import ranked_topk
-    from lucene_mapreduce_spark.query.bm25 import B, K1
 
     docs = load(spark, sf_dir, "documents")
     postings, doclens = corpus_postings(docs)
@@ -6517,17 +6356,11 @@ def ltr_feature_log(
         .join(doclens, "doc_id")
         .crossJoin(F.broadcast(stats))
     )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs") - F.col("df_t") + F.lit(0.5))
-        / (F.col("df_t") + F.lit(0.5))
-    )
-    tf = F.col("tf").cast("double")
-    dl = F.col("dl").cast("double")
-    contrib = (
-        idf
-        * (tf * F.lit(K1 + 1.0))
-        / (tf + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * dl / F.col("avgdl")))
+    contrib = bm25_contrib_col(
+        F.col("tf").cast("double"),
+        F.col("dl").cast("double"),
+        "avgdl",
+        bm25_idf_col("df_t", "n_docs"),
     )
     feats = (
         matched.select(
@@ -6540,14 +6373,7 @@ def ltr_feature_log(
             F.max("tf").cast("long").alias("max_tf"),
             F.min("df_t").cast("long").alias("min_df"),
             F.max("dl").cast("long").alias("dl"),
-            F.round(
-                F.aggregate(
-                    F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x["contrib"],
-                ),
-                6,
-            ).alias("bm25"),
+            F.round(canonical_sum("contrib", "term"), 6).alias("bm25"),
         )
     )
     return ranked_topk(feats, [F.desc("bm25"), F.asc("doc_id")], k).select(
@@ -6666,11 +6492,7 @@ def multiword_synonym_query(
         .withColumn("tf", (F.col("tf_t") + F.col("tf_p")).cast("double"))
         .withColumn("df_b", F.greatest("df_t", "df_p"))
     )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs") - F.col("df_b") + F.lit(0.5))
-        / (F.col("df_b") + F.lit(0.5))
-    )
+    idf = bm25_idf_col("df_b", "n_docs")
     denom = F.col("tf") + F.lit(K1) * (
         F.lit(1.0 - B) + F.lit(B) * F.col("dl").cast("double") / F.col("avgdl")
     )
@@ -6858,7 +6680,6 @@ def shingle_field_topk(
         tokenize_string,
     )
     from lucene_mapreduce_spark.operators.parity import ranked_topk
-    from lucene_mapreduce_spark.query.bm25 import B, K1
 
     docs = load(spark, sf_dir, "documents")
     toks = docs.select("doc_id", tokenize_col("text").alias("toks"))
@@ -6884,28 +6705,16 @@ def shingle_field_topk(
             .join(doclens, "doc_id")
             .crossJoin(F.broadcast(stats))
         )
-        idf = F.log(
-            F.lit(1.0)
-            + (F.col("n_docs") - F.col("df_t") + F.lit(0.5))
-            / (F.col("df_t") + F.lit(0.5))
+        contrib = bm25_contrib_col(
+            F.col("tf").cast("double"),
+            F.col("dl").cast("double"),
+            "avgdl",
+            bm25_idf_col("df_t", "n_docs"),
         )
-        tf = F.col("tf").cast("double")
-        denom = tf + F.lit(K1) * (
-            F.lit(1.0 - B) + F.lit(B) * F.col("dl").cast("double") / F.col("avgdl")
-        )
-        contrib = idf * (tf * F.lit(K1 + 1.0)) / denom
         return (
             m.select("doc_id", "term", contrib.alias("contrib"))
             .groupBy("doc_id")
-            .agg(
-                F.aggregate(
-                    F.sort_array(
-                        F.collect_list(F.struct("term", "contrib"))
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x["contrib"],
-                ).alias("score")
-            )
+            .agg(canonical_sum("contrib", "term").alias("score"))
         )
 
     uni_postings = (
@@ -7329,11 +7138,7 @@ def best_passage_highlight(
         .agg(F.count(F.lit(1)).cast("long").alias("df_t"))
     )
     w12 = F.round(
-        F.log(
-            F.lit(1.0)
-            + (F.lit(float(n_docs)) - F.col("df_t").cast("double") + F.lit(0.5))
-            / (F.col("df_t").cast("double") + F.lit(0.5))
-        ),
+        bm25_idf_col(F.col("df_t").cast("double"), n_docs),
         12,
     ).cast("decimal(28,12)")
     weights = dfs.select("term", w12.alias("w"))
@@ -7603,7 +7408,6 @@ def shard_score_merge_audit(
     via shard-keyed groupBys; the merge touches <= N*5 rows."""
     from lucene_mapreduce_spark.functions.tokenize import tokenize_string
     from lucene_mapreduce_spark.operators.textstats import _md5_52
-    from lucene_mapreduce_spark.query.bm25 import B, K1
     from lucene_mapreduce_spark.query.bm25_df import corpus_postings
 
     docs = load(spark, sf_dir, "documents")
@@ -7628,17 +7432,12 @@ def shard_score_merge_audit(
         .join(dl_s.select("doc_id", "dl"), "doc_id")
         .join(F.broadcast(stats), "shard")
     )
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs").cast("double") - F.col("df_t") + F.lit(0.5))
-        / (F.col("df_t") + F.lit(0.5))
+    contrib = bm25_contrib_col(
+        F.col("tf").cast("double"),
+        F.col("dl").cast("double"),
+        "avgdl",
+        bm25_idf_col("df_t", F.col("n_docs").cast("double")),
     )
-    tf = F.col("tf").cast("double")
-    dl = F.col("dl").cast("double")
-    denom = tf + F.lit(K1) * (
-        F.lit(1.0 - B) + F.lit(B) * dl / F.col("avgdl")
-    )
-    contrib = idf * (tf * F.lit(K1 + 1.0)) / denom
     local = (
         matched.select("shard", "doc_id", contrib.alias("c"))
         .groupBy("shard", "doc_id")
@@ -7717,11 +7516,7 @@ def maxp_passage_retrieval_topk(
         .agg(F.count(F.lit(1)).cast("long").alias("df_t"))
     )
     w12 = F.round(
-        F.log(
-            F.lit(1.0)
-            + (F.lit(float(n_docs)) - F.col("df_t").cast("double") + F.lit(0.5))
-            / (F.col("df_t").cast("double") + F.lit(0.5))
-        ),
+        bm25_idf_col(F.col("df_t").cast("double"), n_docs),
         12,
     ).cast("decimal(28,12)")
     weights = dfs.select("term", w12.alias("w"))
@@ -8218,14 +8013,7 @@ def pivoted_norm_topk(
         "doc_id", "term", (tfp / norm * idf).alias("contrib")
     )
     per_doc = contribs.groupBy("doc_id").agg(
-        F.round(
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["contrib"],
-            ),
-            6,
-        ).alias("score")
+        F.round(canonical_sum("contrib", "term"), 6).alias("score")
     )
     return ranked_topk(
         per_doc, [F.desc("score"), F.asc("doc_id")], k

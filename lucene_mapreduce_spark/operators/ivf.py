@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 
 from lucene_mapreduce_spark.operators.parity import load
 from lucene_mapreduce_spark.operators.similarity import QUERY_VEC_ID, _cosine
+from lucene_mapreduce_spark.query.bm25_df import canonical_sum
 
 N_CENTROIDS_MIN = 16  # floor on the coarse quantizer size
 N_CENTROIDS = N_CENTROIDS_MIN  # back-compat alias (the size at test SFs)
@@ -496,16 +497,7 @@ def ann_ivf_pq_topk(
     adc = (
         codes.join(F.broadcast(qtab), ["m", "cid"])
         .groupBy("vec_id")
-        .agg(
-            F.round(
-                F.aggregate(
-                    F.sort_array(F.collect_list(F.struct("m", "qd"))),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x["qd"],
-                ),
-                6,
-            ).alias("approx_dist")
-        )
+        .agg(F.round(canonical_sum("qd", "m"), 6).alias("approx_dist"))
     )
     return ranked_topk(
         adc, [F.asc("approx_dist"), F.asc("vec_id")], k

@@ -17,6 +17,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from lucene_mapreduce_spark.query.bm25_df import canonical_sum
+
 # NOTE on unpartitioned Window.orderBy usage in this module: the pipeline
 # aggregations (moving_avg, derivative, serial_diff, moving_median,
 # bucket_sort, ewma, ...) window over the GAP-FILLED DATE HISTOGRAM, whose
@@ -2528,12 +2530,7 @@ def sax_daily_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:
     paa = rows.groupBy("window_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_days"),
         (
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("pos", "z"))),
-                F.lit(0.0),
-                lambda a, x: a + x["z"],
-            )
-            / F.count(F.lit(1)).cast("double")
+            canonical_sum("z", "pos") / F.count(F.lit(1)).cast("double")
         ).alias("paa_raw"),
     )
     b1, b2, b3 = SAX_BREAKPOINTS
@@ -3295,16 +3292,7 @@ def chi2_hourly_uniformity(spark: SparkSession, sf_dir: str) -> DataFrame:
     contrib = (F.col("o").cast("double") - e) * (F.col("o").cast("double") - e) / e
     j = filled.crossJoin(F.broadcast(n)).select("hour", contrib.alias("c"))
     return (
-        j.agg(
-            F.round(
-                F.aggregate(
-                    F.sort_array(F.collect_list(F.struct("hour", "c"))),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x["c"],
-                ),
-                6,
-            ).alias("chi2")
-        )
+        j.agg(F.round(canonical_sum("c", "hour"), 6).alias("chi2"))
         .crossJoin(F.broadcast(n))
         .select(
             "n",

@@ -22,6 +22,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lucene_mapreduce_spark.operators.parity import load
+from lucene_mapreduce_spark.query.bm25_df import canonical_sum
 
 QUERY_VEC_ID = 0  # the fixed query vector for the oracle-checked entries
 DIM = 64
@@ -676,16 +677,7 @@ def ann_pq_topk(
     adc = (
         codes.join(F.broadcast(qtab), ["m", "cid"])
         .groupBy("vec_id")
-        .agg(
-            F.round(
-                F.aggregate(
-                    F.sort_array(F.collect_list(F.struct("m", "qd"))),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x["qd"],
-                ),
-                6,
-            ).alias("approx_dist")
-        )
+        .agg(F.round(canonical_sum("qd", "m"), 6).alias("approx_dist"))
     )
     qv = emb.where(F.col("vec_id") == QUERY_VEC_ID).select(
         F.col("v").alias("qv")
@@ -1078,11 +1070,7 @@ def int8_quantization_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     per_vec = errs.groupBy("vec_id", "label").agg(
         F.round(
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("dim", "e2"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["e2"],
-            ) / F.lit(float(DIM)),
+            canonical_sum("e2", "dim") / F.lit(float(DIM)),
             6,
         ).alias("mse")
     )

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 
 from lucene_mapreduce_spark.functions.tokenize import tokenize_col
 from lucene_mapreduce_spark.operators.parity import load
+from lucene_mapreduce_spark.query.bm25_df import canonical_sum
 
 # tiny deterministic stopword lists (shared literal sets with the oracle SQL)
 STOPWORDS = {
@@ -3015,14 +3016,7 @@ def lang_source_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     folded = j.agg(
         F.count(F.lit(1)).cast("long").alias("n_cells"),
-        F.round(
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("source", "lang", "c"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["c"],
-            ),
-            6,
-        ).alias("chi2"),
+        F.round(canonical_sum("c", "source", "lang"), 6).alias("chi2"),
     )
     r = rows.agg(F.count(F.lit(1)).cast("long").alias("nr"))
     c = cols.agg(F.count(F.lit(1)).cast("long").alias("nc"))
@@ -4100,13 +4094,7 @@ def cramers_v_lang_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(n))
         .select("source", "lang", contrib.alias("c"))
     )
-    folded = j.agg(
-        F.aggregate(
-            F.sort_array(F.collect_list(F.struct("source", "lang", "c"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["c"],
-        ).alias("chi2_raw")
-    )
+    folded = j.agg(canonical_sum("c", "source", "lang").alias("chi2_raw"))
     r = rows.agg(F.count(F.lit(1)).cast("long").alias("nr"))
     c = cols.agg(F.count(F.lit(1)).cast("long").alias("nc"))
     j2 = (

@@ -1,52 +1,85 @@
-"""Distributed BM25 over a corpus DataFrame (scan path, no prebuilt index).
+"""Distributed BM25 over DataFrames: the scan path and the one Spark
+scoring seam.
 
-This is the engine's correctness backbone (SURVEY.md §7.2 M1): the same
-scoring spec as ``bm25.py`` expressed as a declarative DataFrame plan so
-Catalyst handles pushdown/pruning and the shuffle strategy. The segment/WAND
-path (query/wand.py) must agree with this, which must agree with the pandas
-oracle.
+The same scoring spec as ``bm25.py`` expressed as a declarative DataFrame
+plan, so Catalyst handles pushdown/pruning and the shuffle strategy. The
+scan path (``bm25_scan_topk``, no prebuilt index) and the index path
+(``segments.bm25_index_topk``) both end in ``score_and_topk``; every
+other Spark scoring site builds on the three helpers below:
 
-Scale shape (100 TB corpus, 1000 executors):
-- postings = explode + groupBy(doc, term): map-side partial aggregation keeps
-  the shuffle at distinct-(doc,term) volume, not token volume;
-- the query-term table is tiny and *broadcast* — the corpus never shuffles by
-  term for scoring;
-- df_t and corpus stats are computed once and reused across queries
-  (``corpus_postings`` is the cache point; the index build persists exactly
-  this + stats so queries skip the corpus scan entirely).
+- ``bm25_idf_col``     -- the one Spark idf expression (Spark's ``log``);
+- ``bm25_contrib_col`` -- the one per-term contribution expression;
+- ``canonical_sum``    -- the determinism rule: per-group float64 sums are
+  folded sequentially in ascending key order (sort_array + aggregate), so
+  the bits do not depend on partitioning or parallelism.
 
-Determinism: per-(query, doc) scores are accumulated in ascending term order
-via sort_array + aggregate over float64 — bit-identical results at any
-parallelism level (the N vs 4N scaling-efficiency requirement includes
-correctness at both sizes).
+Scale shape: postings = explode + groupBy(doc, term), so map-side partial
+aggregation keeps the shuffle at distinct-(doc, term) volume; the
+query-term table is tiny and broadcast, so the corpus never shuffles by
+term for scoring.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from lucene_mapreduce_spark.functions.tokenize import tokenize_col, tokenize_pandas_udf
+from lucene_mapreduce_spark.functions.tokenize import tokenize_col
 from lucene_mapreduce_spark.query.bm25 import B, K1
+
+
+def _col(x: Column | str | float) -> Column:
+    if isinstance(x, Column):
+        return x
+    return F.col(x) if isinstance(x, str) else F.lit(float(x))
+
+
+def canonical_sum(value: str, *keys: str) -> Column:
+    """Aggregate: the float64 sum of ``value`` over the group, folded from
+    0.0 in ascending ``keys`` order -- the same bits at any partitioning."""
+    return F.aggregate(
+        F.sort_array(F.collect_list(F.struct(*keys, value))),
+        F.lit(0.0),
+        lambda acc, x: acc + x[value],
+    )
+
+
+def bm25_idf_col(df: Column | str, n_docs: Column | str | float) -> Column:
+    """ln(1 + (N - df + 0.5) / (df + 0.5)) -- ``bm25.bm25_idf`` in Spark.
+    Spark's ``log`` (StrictMath) can differ from libm's ``math.log`` in the
+    last bit, so Spark-path scores may sit one ulp off the serving path's."""
+    df, n = _col(df), _col(n_docs)
+    return F.log(F.lit(1.0) + (n - df + F.lit(0.5)) / (df + F.lit(0.5)))
+
+
+def bm25_contrib_col(
+    tf: Column | str,
+    dl: Column | str,
+    avgdl: Column | str | float,
+    idf: Column,
+    k1: float = K1,
+    b: float = B,
+) -> Column:
+    """idf * tf * (k1 + 1) / (tf + k1 * (1 - b + b * dl / avgdl)) --
+    ``bm25.bm25_contribution`` in Spark, parenthesized the same way."""
+    tf, dl, avgdl = _col(tf), _col(dl), _col(avgdl)
+    denom = tf + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * dl / avgdl)
+    return idf * (tf * F.lit(k1 + 1.0)) / denom
 
 
 def corpus_postings(
     docs: DataFrame,
     doc_col: str = "doc_id",
     text_col: str = "text",
-    use_arrow_udf: bool = False,
 ) -> tuple[DataFrame, DataFrame]:
     """(postings, doclens) for a corpus.
 
     postings: (doc_id, term, tf)  — one row per distinct (doc, term)
     doclens:  (doc_id, dl)        — token count per doc (0 for empty/null)
-
-    ``use_arrow_udf`` switches the tokenizer to the vectorized Arrow UDF
-    (index-build surface); default is the JVM-side expression — both are
-    equivalence-tested in test_tokenize.py.
     """
-    tok = tokenize_pandas_udf(F.col(text_col)) if use_arrow_udf else tokenize_col(text_col)
-    toks = docs.select(F.col(doc_col).alias("doc_id"), tok.alias("tokens"))
+    toks = docs.select(
+        F.col(doc_col).alias("doc_id"), tokenize_col(text_col).alias("tokens")
+    )
     # coalesce: F.size is NULL for NULL text under ANSI — the oracle and the
     # index build both treat those docs as dl=0, so avgdl must include them
     doclens = toks.select(
@@ -111,14 +144,12 @@ def bm25_scan_topk(
 def _contrib_frame(matched: DataFrame) -> DataFrame:
     """(query_id, doc_id, term, contrib) — the BM25 per-term contribution
     expression, shared by the top-k and all-scores paths."""
-    idf = F.log(
-        F.lit(1.0)
-        + (F.col("n_docs") - F.col("df_t") + F.lit(0.5)) / (F.col("df_t") + F.lit(0.5))
+    contrib = bm25_contrib_col(
+        F.col("tf").cast("double"),
+        F.col("dl").cast("double"),
+        "avgdl",
+        bm25_idf_col("df_t", "n_docs"),
     )
-    tf = F.col("tf").cast("double")
-    dl = F.col("dl").cast("double")
-    denom = tf + F.lit(K1) * (F.lit(1.0 - B) + F.lit(B) * dl / F.col("avgdl"))
-    contrib = idf * (tf * F.lit(K1 + 1.0)) / denom
     return matched.select("query_id", "doc_id", F.col("term"), contrib.alias("contrib"))
 
 
@@ -131,11 +162,7 @@ def exact_scores(
     by group, clustering never ranks globally — so no single-partition
     per-query sort ever materializes."""
     per_doc = _contrib_frame(matched).groupBy("query_id", "doc_id").agg(
-        F.aggregate(
-            F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["contrib"],
-        ).alias("score")
+        canonical_sum("contrib", "term").alias("score")
     )
     if round_to is not None:
         per_doc = per_doc.withColumn("score", F.round("score", round_to))
@@ -213,13 +240,7 @@ def score_and_topk(
         # adversarially tie-heavy corpora fall back to a shuffled semi-join
         scored.join(cand, ["query_id", "doc_id"], "left_semi")
         .groupBy("query_id", "doc_id")
-        .agg(
-            F.aggregate(
-                F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-                F.lit(0.0),
-                lambda acc, x: acc + x["contrib"],
-            ).alias("score")
-        )
+        .agg(canonical_sum("contrib", "term").alias("score"))
     )
 
     w = Window.partitionBy("query_id").orderBy(

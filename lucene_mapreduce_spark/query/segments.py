@@ -18,15 +18,21 @@ with partition-pruned parquet reads of posting blocks:
 from __future__ import annotations
 
 import os
-from typing import Iterator
+from typing import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from lucene_mapreduce_spark.functions.tokenize import tokenize_col
 from lucene_mapreduce_spark.index.manifest import Manifest, load_manifest, segment_dir
-from lucene_mapreduce_spark.query.bm25_df import score_and_topk
+from lucene_mapreduce_spark.query.bm25_df import (
+    bm25_contrib_col,
+    bm25_idf_col,
+    canonical_sum,
+    exact_scores,
+    score_and_topk,
+)
 
 
 def _decode_rows(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -96,23 +102,59 @@ def read_postings(
     span (parquet row-group stats on the chunk-sorted rows) — the docid-
     range axis of pruning, orthogonal to phash/term.
     """
+    m = _manifest(index_dir, manifest)
+    decoded = (
+        _posting_rows(spark, index_dir, terms, m, chunk_range=chunk_range)
+        .select("term", "payload", "seg_seq")
+        .mapInPandas(
+            _decode_rows,
+            schema="term string, doc_id long, tf long, dl long, seg_seq long",
+        )
+    )
+    return _latest_wins(spark, index_dir, m, decoded, chunk_range=chunk_range)
+
+
+def _manifest(index_dir: str, manifest: Manifest | None = None) -> Manifest:
     m = manifest or load_manifest(index_dir)
     assert m is not None, f"no index at {index_dir}"
-    segs = m.ordered()
-    rows = _posting_rows(spark, index_dir, terms, m, chunk_range=chunk_range)
+    return m
 
-    decoded = rows.select("term", "payload", "seg_seq").mapInPandas(
-        _decode_rows, schema="term string, doc_id long, tf long, dl long, seg_seq long"
-    )
 
-    if len(segs) == 1:
-        return decoded.drop("seg_seq")
+def _generations(
+    index_dir: str, m: Manifest, read: Callable[[str], DataFrame]
+) -> DataFrame:
+    """``read(segment_path)`` over every generation, oldest first, each
+    tagged with its seg_seq and unioned -- the input of ``_latest_wins``."""
+    rows = None
+    for s in m.ordered():
+        r = read(segment_dir(index_dir, s.segment_id)).withColumn(
+            "seg_seq", F.lit(s.min_seq)
+        )
+        rows = r if rows is None else rows.unionByName(r)
+    return rows
 
-    # multi-segment: keep only each doc's newest copy (latest-wins upsert)
-    live = live_doclens(spark, index_dir, m, chunk_range=chunk_range).select(
-        "doc_id", "seg_seq"
-    )
-    return decoded.join(live, ["doc_id", "seg_seq"], "left_semi").drop("seg_seq")
+
+def _latest_wins(
+    spark: SparkSession,
+    index_dir: str,
+    m: Manifest,
+    rows: DataFrame,
+    chunk_range: tuple[int, int] | None = None,
+) -> DataFrame:
+    """Keep only rows of each doc's newest copy (latest-wins upsert) and drop
+    seg_seq. A single-generation index has nothing shadowed: no mask."""
+    if len(m.ordered()) > 1:
+        live = live_doclens(spark, index_dir, m, chunk_range=chunk_range).select(
+            "doc_id", "seg_seq"
+        )
+        rows = rows.join(live, ["doc_id", "seg_seq"], "left_semi")
+    return rows.drop("seg_seq")
+
+
+def _term_filter(spark: SparkSession, terms: list[str], m: Manifest) -> Column:
+    """phash-directory pruning + term row-group pushdown for a term list."""
+    phashes = sorted(set(term_phashes(spark, terms, m.num_partitions).values()))
+    return F.col("phash").isin(phashes) & F.col("term").isin(terms)
 
 
 def _posting_rows(
@@ -125,44 +167,24 @@ def _posting_rows(
     """Raw (undecoded) posting-block rows for the given terms across all
     generations, with seg_seq attached — the shared scan prologue of
     read_postings and the no-decode term_dfs stats path."""
-    segs = m.ordered()
-
-    def _chunked(r: DataFrame) -> DataFrame:
-        return (
-            r if chunk_range is None else r.filter(F.col("chunk").between(*chunk_range))
-        )
-
-    rows = None
     if isinstance(terms, DataFrame):
         tdf = F.broadcast(terms.select("term").distinct())
-        for s in segs:
-            r = (
-                _chunked(
-                    spark.read.parquet(
-                        os.path.join(segment_dir(index_dir, s.segment_id), "postings")
-                    )
-                )
-                # phash < P excludes the reserved doclen pseudo partition
-                # (a query token could legitimately spell DL_TERM)
-                .filter(F.col("phash") < F.lit(m.num_partitions))
-                .join(tdf, "term", "inner")
-                .withColumn("seg_seq", F.lit(s.min_seq))
-            )
-            rows = r if rows is None else rows.unionByName(r)
     else:
-        phashes = sorted(set(term_phashes(spark, terms, m.num_partitions).values()))
-        for s in segs:
-            r = (
-                _chunked(
-                    spark.read.parquet(
-                        os.path.join(segment_dir(index_dir, s.segment_id), "postings")
-                    )
-                )
-                .filter(F.col("phash").isin(phashes) & F.col("term").isin(terms))
-                .withColumn("seg_seq", F.lit(s.min_seq))
-            )
-            rows = r if rows is None else rows.unionByName(r)
-    return rows
+        pred = _term_filter(spark, terms, m)
+
+    def read(seg: str) -> DataFrame:
+        r = spark.read.parquet(os.path.join(seg, "postings"))
+        if chunk_range is not None:
+            r = r.filter(F.col("chunk").between(*chunk_range))
+        if not isinstance(terms, DataFrame):
+            return r.filter(pred)
+        # phash < P excludes the reserved doclen pseudo partition
+        # (a query token could legitimately spell DL_TERM)
+        return r.filter(F.col("phash") < F.lit(m.num_partitions)).join(
+            tdf, "term", "inner"
+        )
+
+    return _generations(index_dir, m, read)
 
 
 def term_dfs(
@@ -182,8 +204,7 @@ def term_dfs(
     block stats an overcount. Values are identical either way; this exists
     so the batch-query prologue stops decoding every payload twice (once
     for df_t, once for scoring)."""
-    m = manifest or load_manifest(index_dir)
-    assert m is not None, f"no index at {index_dir}"
+    m = _manifest(index_dir, manifest)
     if len(m.ordered()) == 1:
         return (
             _posting_rows(spark, index_dir, terms, m)
@@ -209,17 +230,12 @@ def live_doclens(
     chunk_range prunes each segment's doclen read to the chunk span."""
     from lucene_mapreduce_spark.index.build import read_doclens
 
-    m = manifest or load_manifest(index_dir)
-    assert m is not None
-    dfs = None
-    for s in m.ordered():
-        d = read_doclens(
-            spark,
-            segment_dir(index_dir, s.segment_id),
-            m.num_partitions,
-            chunk_range=chunk_range,
-        ).withColumn("seg_seq", F.lit(s.min_seq))
-        dfs = d if dfs is None else dfs.unionByName(d)
+    m = _manifest(index_dir, manifest)
+    dfs = _generations(
+        index_dir,
+        m,
+        lambda seg: read_doclens(spark, seg, m.num_partitions, chunk_range=chunk_range),
+    )
     if len(m.segments) == 1:
         return dfs
     w = Window.partitionBy("doc_id").orderBy(F.col("seg_seq").desc())
@@ -240,28 +256,19 @@ def read_positions(
     from the positional sidecar (build with_positions=True): phash-directory
     pruning + term row-group pushdown, latest-wins across generations —
     the batch-path twin of IndexSearcher._load_positions."""
-    m = manifest or load_manifest(index_dir)
-    assert m is not None, f"no index at {index_dir}"
-    segs = m.ordered()
-    assert all(s.has_positions for s in segs), (
+    m = _manifest(index_dir, manifest)
+    assert all(s.has_positions for s in m.ordered()), (
         "batch phrase matching needs with_positions=True segments"
     )
-    phashes = sorted(set(term_phashes(spark, terms, m.num_partitions).values()))
-    rows = None
-    for s in segs:
-        r = (
-            spark.read.parquet(
-                os.path.join(segment_dir(index_dir, s.segment_id), "positions")
-            )
-            .filter(F.col("phash").isin(phashes) & F.col("term").isin(terms))
-            .withColumn("seg_seq", F.lit(s.min_seq))
-        )
-        rows = r if rows is None else rows.unionByName(r)
-    rows = rows.select("term", "doc_id", "positions", "seg_seq")
-    if len(segs) == 1:
-        return rows.drop("seg_seq")
-    live = live_doclens(spark, index_dir, m).select("doc_id", "seg_seq")
-    return rows.join(live, ["doc_id", "seg_seq"], "left_semi").drop("seg_seq")
+    pred = _term_filter(spark, terms, m)
+    rows = _generations(
+        index_dir,
+        m,
+        lambda seg: spark.read.parquet(os.path.join(seg, "positions")).filter(pred),
+    )
+    return _latest_wins(
+        spark, index_dir, m, rows.select("term", "doc_id", "positions", "seg_seq")
+    )
 
 
 def phrase_match(
@@ -306,34 +313,35 @@ def phrase_match(
     return cur.select("doc_id").orderBy("doc_id")
 
 
+def _field_rows(
+    spark: SparkSession, index_dir: str, fld: str, *conds: Column
+) -> DataFrame:
+    """Live rows of one indexed field from the fields sidecar: one
+    field-directory read per generation (``conds`` prune row groups),
+    latest-wins across generations."""
+    m = _manifest(index_dir)
+    assert all(fld in s.indexed_fields for s in m.ordered()), (
+        f"field {fld!r} not indexed in every generation"
+    )
+    pred = F.col("field") == fld
+    for c in conds:
+        pred = pred & c
+    rows = _generations(
+        index_dir,
+        m,
+        lambda seg: spark.read.parquet(os.path.join(seg, "fields")).filter(pred),
+    )
+    return _latest_wins(spark, index_dir, m, rows)
+
+
 def field_match(
     spark: SparkSession, index_dir: str, fld: str, value: str
 ) -> DataFrame:
     """Distributed keyword-field retrieval from the indexed-fields sidecar
-    (Lucene StringField TermQuery): one field-directory read per segment
-    with the value filter pruning row groups, latest-wins across
-    generations. The batch twin of IndexSearcher._field_hits — pure field
-    queries at corpus scale without touching text postings."""
-    m = load_manifest(index_dir)
-    assert m is not None, f"no index at {index_dir}"
-    segs = m.ordered()
-    assert all(fld in s.indexed_fields for s in segs), (
-        f"field {fld!r} not indexed in every generation"
-    )
-    rows = None
-    for s in segs:
-        r = (
-            spark.read.parquet(
-                os.path.join(segment_dir(index_dir, s.segment_id), "fields")
-            )
-            .filter((F.col("field") == fld) & (F.col("value") == value))
-            .withColumn("seg_seq", F.lit(s.min_seq))
-        )
-        rows = r if rows is None else rows.unionByName(r)
-    rows = rows.select("doc_id", "seg_seq")
-    if len(segs) > 1:
-        live = live_doclens(spark, index_dir, m).select("doc_id", "seg_seq")
-        rows = rows.join(live, ["doc_id", "seg_seq"], "left_semi")
+    (Lucene StringField TermQuery), the value filter pruning row groups.
+    The batch twin of IndexSearcher._field_hits — pure field queries at
+    corpus scale without touching text postings."""
+    rows = _field_rows(spark, index_dir, fld, F.col("value") == value)
     return rows.select("doc_id").distinct().orderBy("doc_id")
 
 
@@ -342,28 +350,8 @@ def field_values(
 ) -> DataFrame:
     """(value, doc_id) live rows of one indexed keyword field — the
     SortedSetDocValues face of the fields sidecar, for faceting and
-    grouping (one field-directory read per segment, latest-wins)."""
-    m = load_manifest(index_dir)
-    assert m is not None, f"no index at {index_dir}"
-    segs = m.ordered()
-    assert all(fld in s.indexed_fields for s in segs), (
-        f"field {fld!r} not indexed in every generation"
-    )
-    rows = None
-    for s in segs:
-        r = (
-            spark.read.parquet(
-                os.path.join(segment_dir(index_dir, s.segment_id), "fields")
-            )
-            .filter(F.col("field") == fld)
-            .withColumn("seg_seq", F.lit(s.min_seq))
-        )
-        rows = r if rows is None else rows.unionByName(r)
-    rows = rows.select("value", "doc_id", "seg_seq")
-    if len(segs) > 1:
-        live = live_doclens(spark, index_dir, m).select("doc_id", "seg_seq")
-        rows = rows.join(live, ["doc_id", "seg_seq"], "left_semi")
-    return rows.select("value", "doc_id")
+    grouping."""
+    return _field_rows(spark, index_dir, fld).select("value", "doc_id")
 
 
 def field_num_values(
@@ -372,28 +360,8 @@ def field_num_values(
     """(doc_id, num_value) live rows of one indexed numeric field — the
     SortedNumericDocValues face of the fields sidecar (the num_value twin
     written for PointRangeQuery), for range faceting and numeric rollups
-    over hit sets. Same read/latest-wins shape as field_values."""
-    m = load_manifest(index_dir)
-    assert m is not None, f"no index at {index_dir}"
-    segs = m.ordered()
-    assert all(fld in s.indexed_fields for s in segs), (
-        f"field {fld!r} not indexed in every generation"
-    )
-    rows = None
-    for s in segs:
-        r = (
-            spark.read.parquet(
-                os.path.join(segment_dir(index_dir, s.segment_id), "fields")
-            )
-            .filter(F.col("field") == fld)
-            .withColumn("seg_seq", F.lit(s.min_seq))
-        )
-        rows = r if rows is None else rows.unionByName(r)
-    rows = rows.select("doc_id", "num_value", "seg_seq")
-    if len(segs) > 1:
-        live = live_doclens(spark, index_dir, m).select("doc_id", "seg_seq")
-        rows = rows.join(live, ["doc_id", "seg_seq"], "left_semi")
-    return rows.select("doc_id", "num_value")
+    over hit sets."""
+    return _field_rows(spark, index_dir, fld).select("doc_id", "num_value")
 
 
 def field_range_match(
@@ -407,30 +375,12 @@ def field_range_match(
     the fields sidecar's num_value column — inclusive [lo, hi], None =
     open end. Row-group stats prune because numeric fields are num-sorted
     on disk."""
-    m = load_manifest(index_dir)
-    assert m is not None, f"no index at {index_dir}"
-    segs = m.ordered()
-    assert all(fld in s.indexed_fields for s in segs), (
-        f"field {fld!r} not indexed in every generation"
-    )
-    rows = None
-    for s in segs:
-        r = spark.read.parquet(
-            os.path.join(segment_dir(index_dir, s.segment_id), "fields")
-        ).filter(F.col("field") == fld)
-        if lo is not None:
-            r = r.filter(F.col("num_value") >= lo)
-        if hi is not None:
-            r = r.filter(F.col("num_value") <= hi)
-        rows = (
-            r.withColumn("seg_seq", F.lit(s.min_seq))
-            if rows is None
-            else rows.unionByName(r.withColumn("seg_seq", F.lit(s.min_seq)))
-        )
-    rows = rows.select("doc_id", "seg_seq")
-    if len(segs) > 1:
-        live = live_doclens(spark, index_dir, m).select("doc_id", "seg_seq")
-        rows = rows.join(live, ["doc_id", "seg_seq"], "left_semi")
+    conds = []
+    if lo is not None:
+        conds.append(F.col("num_value") >= lo)
+    if hi is not None:
+        conds.append(F.col("num_value") <= hi)
+    rows = _field_rows(spark, index_dir, fld, *conds)
     return rows.select("doc_id").distinct().orderBy("doc_id")
 
 
@@ -575,8 +525,7 @@ def pit_manifest(
     XdiReportReducer.java:342-356)."""
     import dataclasses
 
-    m = manifest or load_manifest(index_dir)
-    assert m is not None, f"no index at {index_dir}"
+    m = _manifest(index_dir, manifest)
     segs = [s for s in m.segments if s.max_seq <= as_of]
     assert segs, f"no segments committed at or before seq {as_of}"
     return dataclasses.replace(m, segments=segs)
@@ -588,8 +537,7 @@ def exact_stats(
     """Exact (n_docs, avgdl) over live docs. For a fully merged index this
     equals the manifest's totals (asserted in tests); for a multi-generation
     index it applies latest-wins."""
-    m = manifest or load_manifest(index_dir)
-    assert m is not None
+    m = _manifest(index_dir, manifest)
     if len(m.segments) == 1:
         s = m.segments[0]
         return s.n_docs, (s.total_tokens / s.n_docs if s.n_docs else 0.0)
@@ -637,8 +585,6 @@ def bm25_scores(
     exact-score face of the index path, for operators that impose their
     own narrower ranking (collapse partitions by group) and must never
     funnel the full hit set through one per-query window partition."""
-    from lucene_mapreduce_spark.query.bm25_df import exact_scores
-
     matched = _matched_frame(spark, index_dir, queries, max_pushdown_terms)
     return exact_scores(matched, round_to=round_to)
 
@@ -653,24 +599,42 @@ def _matched_frame(
     """(query_id, doc_id, term, tf, dl, df_t, n_docs, avgdl) for a query
     batch — the shared prologue of the ranked and unranked index paths.
     ``manifest`` overrides the on-disk manifest (point-in-time reads)."""
-    m = manifest or load_manifest(index_dir)
-    assert m is not None
+    m = _manifest(index_dir, manifest)
+    qterms, terms = _query_terms(queries, max_pushdown_terms)
+    n_docs, avgdl = exact_stats(spark, index_dir, m)
+
+    postings = read_postings(spark, index_dir, terms, m)
+    df_t = term_dfs(spark, index_dir, terms, m, postings=postings)
+    return _matched(postings, qterms, df_t, n_docs, avgdl)
+
+
+def _query_terms(
+    queries: DataFrame, max_pushdown_terms: int
+) -> tuple[DataFrame, list[str] | DataFrame]:
+    """(qterms, terms): the distinct (query_id, term) frame, and the term set
+    to read — a driver-side list (phash + row-group pushdown) when the batch
+    has at most max_pushdown_terms distinct terms, else the distinct-term
+    frame. Bounded probe: at most max_pushdown_terms+1 rows are fetched."""
     qterms = (
         queries.select("query_id", F.explode(tokenize_col("query_text")).alias("term"))
         .distinct()
     )
     qterm_list = qterms.select("term").distinct()
-    # bounded probe: fetch at most max_pushdown_terms+1 rows to pick the plan
     head = qterm_list.limit(max_pushdown_terms + 1).collect()
     if len(head) <= max_pushdown_terms:
-        terms: list[str] | DataFrame = [r["term"] for r in head]
-    else:
-        terms = qterm_list
-    n_docs, avgdl = exact_stats(spark, index_dir, m)
+        return qterms, [r["term"] for r in head]
+    return qterms, qterm_list
 
-    postings = read_postings(spark, index_dir, terms, m)
-    df_t = term_dfs(spark, index_dir, terms, m, postings=postings)
 
+def _matched(
+    postings: DataFrame,
+    qterms: DataFrame,
+    df_t: DataFrame,
+    n_docs: int,
+    avgdl: float,
+) -> DataFrame:
+    """The score_and_topk input: postings joined to their queries and df_t,
+    with the corpus stats as literal columns."""
     return (
         postings.join(F.broadcast(qterms), "term", "inner")
         .join(F.broadcast(df_t), "term", "inner")
@@ -703,7 +667,6 @@ def ext_score_topk(
     distinct-term count at doc granularity; only the aggregated per-doc
     scores are ranked."""
     from lucene_mapreduce_spark.operators.parity import ranked_topk
-    from lucene_mapreduce_spark.query.bm25 import B, K1
 
     terms = sorted({t for t, _ in score_terms})
     if not terms:
@@ -715,19 +678,14 @@ def ext_score_topk(
         sorted(score_terms), "term string, weight double"
     )
 
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(float(n_docs)) - F.col("df_t") + F.lit(0.5))
-        / (F.col("df_t") + F.lit(0.5))
-    )
-    tf = F.col("tf").cast("double")
-    dl = F.col("dl").cast("double")
-    denom = tf + F.lit(K1) * (
-        F.lit(1.0 - B) + F.lit(B) * dl / F.lit(float(avgdl))
-    )
     # parenthesized exactly as the serving path accumulates
     # (w * contrib, wand.py search_parsed_ext) so the two are float-identical
-    contrib = F.col("weight") * (idf * (tf * F.lit(K1 + 1.0)) / denom)
+    contrib = F.col("weight") * bm25_contrib_col(
+        F.col("tf").cast("double"),
+        F.col("dl").cast("double"),
+        avgdl,
+        bm25_idf_col("df_t", n_docs),
+    )
 
     matched = (
         postings.join(F.broadcast(wdf), "term", "inner")
@@ -741,11 +699,7 @@ def ext_score_topk(
         .select("doc_id")
     )
     scores = matched.groupBy("doc_id").agg(
-        F.aggregate(
-            F.sort_array(F.collect_list(F.struct("term", "contrib"))),
-            F.lit(0.0),
-            lambda acc, x: acc + x["contrib"],
-        ).alias("score")
+        canonical_sum("contrib", "term").alias("score")
     )
     out = cand.join(scores, "doc_id", "left").select(
         "doc_id", F.coalesce("score", F.lit(0.0)).alias("score")
@@ -777,15 +731,13 @@ def more_like_this(
     fetched via the pruned posting read); the search stage is the same
     distributed plan as bm25_index_topk.  Requires store_fields=True.
     """
-    import math
-
     import numpy as np
 
     from lucene_mapreduce_spark.functions.tokenize import tokenize_string
+    from lucene_mapreduce_spark.query.bm25 import bm25_idf
     from lucene_mapreduce_spark.query.wand import IndexSearcher
 
-    m = load_manifest(index_dir)
-    assert m is not None, f"no index at {index_dir}"
+    m = _manifest(index_dir)
     text = (
         IndexSearcher(index_dir)
         ._load_texts(np.asarray([src_doc], np.int64))
@@ -814,11 +766,7 @@ def more_like_this(
     }
     # identical float spec to the oracle: tf * ln(1 + (N - df + .5)/(df + .5))
     ranked = sorted(
-        (
-            (-(tf[t] * math.log(1.0 + (n_docs - dfmap[t] + 0.5) / (dfmap[t] + 0.5))), t)
-            for t in cand
-            if t in dfmap
-        )
+        (-(tf[t] * bm25_idf(dfmap[t], n_docs)), t) for t in cand if t in dfmap
     )
     qts = [t for _, t in ranked[:max_terms]]
 
@@ -827,12 +775,8 @@ def more_like_this(
     qterms = spark.createDataFrame(
         [("q0", t) for t in qts], "query_id string, term string"
     )
-    matched = (
-        postings.filter(F.col("doc_id") != src_doc)
-        .join(F.broadcast(qterms), "term", "inner")
-        .join(F.broadcast(df_t), "term", "inner")
-        .withColumn("n_docs", F.lit(float(n_docs)))
-        .withColumn("avgdl", F.lit(float(avgdl)))
+    matched = _matched(
+        postings.filter(F.col("doc_id") != src_doc), qterms, df_t, n_docs, avgdl
     )
     return score_and_topk(matched, k=k, round_to=round_to)
 
@@ -862,21 +806,11 @@ def bm25_range_topk(
     standalone index built from that range would return (the oracle filters
     the corpus first and runs the same BM25 spec).
     """
-    m = load_manifest(index_dir)
-    assert m is not None, f"no index at {index_dir}"
+    m = _manifest(index_dir)
     assert lo < hi
     c_range = (lo // m.chunk_docs, (hi - 1) // m.chunk_docs)
     in_range = (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
-
-    qterms = (
-        queries.select("query_id", F.explode(tokenize_col("query_text")).alias("term"))
-        .distinct()
-    )
-    qterm_list = qterms.select("term").distinct()
-    head = qterm_list.limit(max_pushdown_terms + 1).collect()
-    terms: list[str] | DataFrame = (
-        [r["term"] for r in head] if len(head) <= max_pushdown_terms else qterm_list
-    )
+    qterms, terms = _query_terms(queries, max_pushdown_terms)
 
     # range-scoped stats from the chunk-pruned doclen rows (boundary chunks
     # need the exact docid filter — a chunk can straddle lo or hi)
@@ -897,10 +831,5 @@ def bm25_range_topk(
         in_range
     )
     df_t = postings.groupBy("term").agg(F.count(F.lit(1)).alias("df_t"))
-    matched = (
-        postings.join(F.broadcast(qterms), "term", "inner")
-        .join(F.broadcast(df_t), "term", "inner")
-        .withColumn("n_docs", F.lit(float(n_docs)))
-        .withColumn("avgdl", F.lit(float(avgdl)))
-    )
+    matched = _matched(postings, qterms, df_t, n_docs, avgdl)
     return score_and_topk(matched, k=k, round_to=round_to)

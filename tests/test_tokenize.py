@@ -4,12 +4,10 @@ from __future__ import annotations
 
 import duckdb
 import pandas as pd
-from pyspark.sql import functions as F
 
 from lucene_mapreduce_spark.functions.tokenize import (
     duckdb_tokens_sql,
     tokenize_col,
-    tokenize_pandas_udf,
     tokenize_string,
 )
 
@@ -46,16 +44,6 @@ def test_spark_builtin_matches_python(spark):
         expected = tokenize_string(s)
         actual = got[i] if got[i] is not None else []
         assert actual == expected, f"mismatch on {s!r}"
-
-
-def test_arrow_udf_matches_python(spark):
-    df = spark.createDataFrame([(i, s) for i, s in enumerate(ADVERSARIAL)], "i int, text string")
-    got = {
-        r["i"]: r["toks"]
-        for r in df.select("i", tokenize_pandas_udf(F.col("text")).alias("toks")).collect()
-    }
-    for i, s in enumerate(ADVERSARIAL):
-        assert (got[i] or []) == tokenize_string(s), f"mismatch on {s!r}"
 
 
 def test_duckdb_matches_python():
@@ -99,16 +87,3 @@ def test_kernel_splitter_matches_python():
             expected_par.append(i)
     assert flat == expected_flat and par == expected_par
 
-
-def test_corpus_equivalence(spark, sf_dir):
-    """JVM expression vs Arrow UDF on the real documents table."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    diff = (
-        docs.select(
-            tokenize_col("text").alias("a"),
-            tokenize_pandas_udf(F.col("text")).alias("b"),
-        )
-        .filter(F.col("a") != F.col("b"))
-        .count()
-    )
-    assert diff == 0
